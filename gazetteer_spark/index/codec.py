@@ -18,7 +18,19 @@ block-max WAND skipping). Block metadata rows carry
 
 Everything is numpy array-at-a-time — no per-element Python in encode or
 decode; whole shards encode in ONE vectorized pass
-(:func:`encode_blocks_grouped`).
+(:func:`encode_blocks_grouped`, :func:`encode_positions_grouped`).
+
+Grouped decoders are the merge-side twins: they take MANY buffers (one
+per segment row) and decode them in one pass over their concatenation,
+returning flat columns plus per-buffer counts —
+
+- :func:`_varbyte_decode_grouped` → (values, values per buffer);
+- :func:`decode_postings_grouped` → (docids, tfs, postings per buffer);
+- :func:`decode_positions_grouped` → flat positions, stripping each
+  blob's block header and checking each row's length against its tf sum.
+
+Each equals its per-buffer counterpart (:func:`_varbyte_decode`,
+:func:`decode_postings`, :func:`decode_positions`) on every buffer.
 """
 
 from __future__ import annotations
@@ -86,6 +98,39 @@ def _varbyte_decode(buf) -> np.ndarray:
         out, vid, (b & np.uint8(0x7F)).astype(np.uint64) << (7 * bytepos).astype(np.uint64)
     )
     return out
+
+
+def _varbyte_decode_joined(b: np.ndarray, lens: np.ndarray):
+    """Concatenated varbyte buffers (uint8 ``b``, byte length per buffer
+    ``lens``) → (uint64 values, values per buffer). Every buffer must end
+    on a value's last byte, so no value straddles two buffers."""
+    ends = np.cumsum(lens)
+    is_last = (b & 0x80) == 0
+    full = lens > 0
+    if not is_last[ends[full] - 1].all():
+        raise ValueError("varbyte buffer ends inside a value")
+    nlast = np.concatenate([[0], np.cumsum(is_last)])
+    counts = nlast[ends] - nlast[ends - lens]
+    if len(b) == 0:
+        return np.zeros(0, dtype=np.uint64), counts
+    opens = np.concatenate([[True], is_last[:-1]])  # a value's first byte
+    first = np.flatnonzero(opens)
+    vid = np.cumsum(opens) - 1
+    bytepos = np.arange(len(b), dtype=np.int64) - first[vid]
+    chunks = (b & np.uint8(0x7F)).astype(np.uint64) << (7 * bytepos).astype(np.uint64)
+    return np.bitwise_or.reduceat(chunks, first), counts
+
+
+def _join(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """Buffers (None = empty) → (one uint8 array, byte length per buffer)."""
+    bufs = [b"" if x is None else x for x in bufs]
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    return np.frombuffer(b"".join(bufs), dtype=np.uint8), lens
+
+
+def _varbyte_decode_grouped(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """Many varbyte buffers → (flat uint64 values, values per buffer)."""
+    return _varbyte_decode_joined(*_join(bufs))
 
 
 def _zigzag_vec(d: np.ndarray) -> np.ndarray:
@@ -279,12 +324,51 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
     vals = _varbyte_decode(np.frombuffer(stream, dtype=np.uint8)).astype(np.int64)
     if len(vals) != int(t.sum()):
         raise ValueError("positions stream length does not match tf sum")
+    return _undelta_runs(vals, t)
+
+
+def _undelta_runs(vals: np.ndarray, t: np.ndarray) -> np.ndarray:
+    """Per-posting delta values (runs of ``t`` values each) → positions:
+    a segmented prefix sum that resets at every run's first value."""
     if len(vals) == 0:
         return np.zeros(0, dtype=np.int64)
     cum = np.cumsum(vals)
     run_starts = np.concatenate([[0], np.cumsum(t)[:-1]])
     corr = cum[run_starts] - vals[run_starts]
     return cum - np.repeat(corr, t)
+
+
+def decode_positions_grouped(bufs, tfs: np.ndarray,
+                             counts: np.ndarray) -> np.ndarray:
+    """Many positions blobs (one per posting row) → flat int64 positions
+    in one pass. ``tfs`` is the rows' concatenated per-posting tfs and
+    ``counts`` the postings per row (as :func:`decode_postings_grouped`
+    returns them). Each blob's block header is stripped, every row's
+    stream must hold exactly its tf sum of values, and the result equals
+    concatenating :func:`decode_positions` over the rows."""
+    t = np.asarray(tfs, np.int64)
+    counts = np.asarray(counts, np.int64)
+    raw, lens = _join(bufs)
+    full = np.flatnonzero(lens)
+    offs = np.cumsum(lens) - lens
+    if (lens[full] < 4).any():
+        raise ValueError("positions blob shorter than its header")
+    nb = raw[offs[full, None] + np.arange(4)].view("<u4").ravel()
+    head = 4 + 8 * nb.astype(np.int64)
+    if (head > lens[full]).any():
+        raise ValueError("positions blob shorter than its header")
+    seg = np.empty(2 * len(full), dtype=np.int64)
+    seg[0::2] = head
+    seg[1::2] = lens[full] - head
+    in_stream = np.repeat(np.tile([False, True], len(full)), seg)
+    stream_lens = np.zeros(len(lens), dtype=np.int64)
+    stream_lens[full] = lens[full] - head
+    vals, got = _varbyte_decode_joined(raw[in_stream], stream_lens)
+    tf_cum = np.concatenate([[0], np.cumsum(t)])
+    row_ends = np.cumsum(counts)
+    if not np.array_equal(got, tf_cum[row_ends] - tf_cum[row_ends - counts]):
+        raise ValueError("positions stream length does not match tf sum")
+    return _undelta_runs(vals.astype(np.int64), t)
 
 
 def decode_positions_blocks(
@@ -304,12 +388,7 @@ def decode_positions_blocks(
     vals = _varbyte_decode(np.frombuffer(joined, dtype=np.uint8)).astype(np.int64)
     if len(vals) != int(t.sum()):
         raise ValueError("selected positions do not match tf sum")
-    if len(vals) == 0:
-        return np.zeros(0, dtype=np.int64)
-    cum = np.cumsum(vals)
-    run_starts = np.concatenate([[0], np.cumsum(t)[:-1]])
-    corr = cum[run_starts] - vals[run_starts]
-    return cum - np.repeat(corr, t)
+    return _undelta_runs(vals, t)
 
 
 def gather_runs(flat: np.ndarray, tfs: np.ndarray, order: np.ndarray) -> np.ndarray:
@@ -339,19 +418,18 @@ def decode_block_meta(buf: bytes):
     )
 
 
-def _decode_stream(stream: np.ndarray, nblocks_hint: int | None = None):
-    """Decode a concatenation of block streams → (docids, tfs).
+def _decode_blocks_at(stream: np.ndarray, starts: np.ndarray,
+                      ends: np.ndarray):
+    """Decode consecutive posting blocks ``[starts[b], ends[b])`` (global
+    posting indexes, covering 0..n) of a value stream → (docids, tfs).
 
-    Block sizes are implied: every block holds BLOCK postings except the
-    final one. stream holds 2 values per posting."""
-    n = len(stream) // 2
+    A block's values are its deltas then its tfs, so with global posting
+    index j, block [s, e)'s delta sits at value s + j and its tf at e + j
+    (every list's values start at twice its first posting index)."""
+    n = int(ends[-1]) if len(ends) else 0
     if n == 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int32)
-    nblocks = (n + BLOCK - 1) // BLOCK
-    starts = np.arange(nblocks, dtype=np.int64) * BLOCK
-    ends = np.minimum(starts + BLOCK, n)
     blens = ends - starts
-    # value positions: block b's deltas at [2s, 2s+len), tfs at [2s+len, 2e)
     idx = np.arange(n, dtype=np.int64)
     s_row = np.repeat(starts, blens)
     e_row = np.repeat(ends, blens)
@@ -368,9 +446,32 @@ def _decode_stream(stream: np.ndarray, nblocks_hint: int | None = None):
     return docids.astype(np.int64), tfs.astype(np.int32)
 
 
+def _decode_stream(stream: np.ndarray):
+    """Decode one posting list's value stream → (docids, tfs). Block
+    sizes are implied: every block holds BLOCK postings except the final
+    one; the stream holds 2 values per posting."""
+    starts = np.arange(0, len(stream) // 2, BLOCK, dtype=np.int64)
+    return _decode_blocks_at(stream, starts,
+                             np.minimum(starts + BLOCK, len(stream) // 2))
+
+
 def decode_postings(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
     """Full-list decode → (docids int64 sorted, tfs int32)."""
     return _decode_stream(_varbyte_decode(buf))
+
+
+def decode_postings_grouped(bufs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Many posting buffers (None = empty) → (docids, tfs, postings per
+    buffer), decoded in one pass; equals concatenating
+    :func:`decode_postings` over the buffers."""
+    vals, nvals = _varbyte_decode_grouped(bufs)
+    if (nvals & 1).any():
+        raise ValueError("posting buffer holds an odd number of values")
+    counts = nvals // 2
+    ends = np.cumsum(counts)
+    starts, ends, _ = _block_bounds(ends - counts, ends)
+    docids, tfs = _decode_blocks_at(vals, starts, ends)
+    return docids, tfs, counts
 
 
 def decode_blocks(buf: bytes, byte_ends: np.ndarray,
@@ -414,9 +515,11 @@ class DelIndex:
         shard of the same delete, replicated into a term-layout bucket) —
         same-gen buffers are merged, never compared (a bare sort would
         tie on gen and fall into ambiguous ndarray comparison)."""
+        pairs = list(gens_and_bufs)
+        ids, _, counts = decode_postings_grouped([b for _, b in pairs])
         by_gen: dict[int, list[np.ndarray]] = {}
-        for g, b in gens_and_bufs:
-            by_gen.setdefault(int(g), []).append(decode_postings(b)[0])
+        for (g, _), part in zip(pairs, np.split(ids, np.cumsum(counts)[:-1])):
+            by_gen.setdefault(int(g), []).append(part)
         gens = sorted(by_gen)
         self._gens = np.array(gens, dtype=np.int64)
         self._ids = [

@@ -12,12 +12,15 @@ into ``bucket = xxhash64(term) % n_buckets`` parquet partitions.
 Scale shape of the build: ONE shuffle of already-compressed posting bytes
 grouped by term-hash bucket (NOT by raw term — the per-bucket reducer
 handles many terms vectorized, so a hot term never owns a reduce task by
-itself beyond its own bytes); merge is decode → concat → argsort →
-re-encode in numpy. Layout-v3 sources (``build_index(..., doclens=True)``)
-already carry a per-posting doclen stream next to the posting bytes, so
-the build is a narrow select straight into that shuffle; v2 sources first
-run a map stage grouped by SHARD that resolves each posting's doclen from
-the shard's own doc table (doclens stay shard-local — no doclen shuffle,
+itself beyond its own bytes). The merge (:func:`_merge_bucket`) is ONE
+columnar numpy pass per bucket: grouped decode of every row's streams →
+tombstone mask → one (term, docid) lexsort → grouped re-encode of every
+term run, so its cost is per posting, not per term, and its per-task
+memory is one bucket's decoded columns. Layout-v3 sources
+(``build_index(..., doclens=True)``) already carry a per-posting doclen
+stream next to the posting bytes, so the build is a narrow select
+straight into that shuffle; v2 sources first run a map stage grouped by
+SHARD that resolves each posting's doclen from the shard's own doc table (doclens stay shard-local — no doclen shuffle,
 no per-task memory beyond one shard). Readers prune by partition (bucket)
 AND parquet min/max on term, so a lookup of k terms touches ≤ k buckets'
 row groups — query cost scales with the QUERY's terms, not the corpus's
@@ -62,7 +65,6 @@ from .codec import (
     _varbyte_decode,
     _varbyte_encode,
     decode_postings,
-    encode_postings,
 )
 
 TERM_LAYOUT_SCHEMA = (
@@ -147,7 +149,7 @@ def _resolve_doclens_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     out = []
     for r in posts.itertuples():
         ids, _ = decode_postings(r.postings)
-        dls = all_lens[np.searchsorted(all_ids, ids)]
+        dls = _doclens_from_docs(all_ids, all_lens, ids)
         out.append((
             "post", r.term, int(r.gen) if has_gen else 0, r.postings,
             _varbyte_encode(dls.astype(np.uint64)),
@@ -157,92 +159,135 @@ def _resolve_doclens_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     return res.astype({"gen": "int32"})
 
 
+def _doclens_from_docs(all_ids: np.ndarray, all_lens: np.ndarray,
+                       ids: np.ndarray) -> np.ndarray:
+    """Doclen of every docid in ``ids`` from a merged doc table (sorted
+    ``all_ids``, see wand._doc_meta). A docid the table lacks is a wiring
+    bug, never a neighbour's doclen."""
+    idx = np.searchsorted(all_ids, ids)
+    found = idx < len(all_ids)
+    found[found] = all_ids[idx[found]] == ids[found]
+    if not found.all():
+        raise ValueError(
+            f"{int((~found).sum())} posting docid(s) absent from the doc "
+            "tables — doclen source missing (build/refresh wiring bug)"
+        )
+    return all_lens[idx]
+
+
 def _merge_bucket(pdf: pd.DataFrame, with_doclens: bool,
                   with_positions: bool = False) -> pd.DataFrame:
-    """One bucket's segment rows → one merged row per term. Tombstones are
-    generation-ordered (a del masks only older generations — see
-    codec.DelIndex), so re-added docids keep their newest postings.
+    """One bucket's segment rows → one merged row per term, in ONE
+    columnar pass over the whole bucket (no per-term Python):
+
+    1. decode every post row's postings, doclens and positions with one
+       grouped codec call each, into flat per-posting columns tagged with
+       the row's term code and generation;
+    2. drop tombstoned postings — generation-ordered (a del masks only
+       older generations — see codec.DelIndex), one ``keep_mask`` per
+       distinct generation, so re-added docids keep their newest postings;
+    3. ``lexsort`` by (term, docid) once, reordering positions runs with
+       one ``gather_runs``; a docid seen twice under one term is an error;
+    4. cut term runs where the term code changes and re-encode every term
+       with one grouped call per stream.
 
     Doclens per posting come from the row's own varbyte stream when
     present (v3 sources; existing layout rows in a refresh); post rows
     WITHOUT a stream resolve against the bucket's replicated kind='docs'
     tables (latest generation wins — see _layout_input_rows
     ``replicate_docs``), exactly the values the shard-group resolve stage
-    would have attached.
+    would have attached. The merged positions blob stays BLOCK-aligned
+    with the merged postings, so the block-selective decode phrase serving
+    relies on works on layout rows exactly as on segment rows.
 
-    ``with_positions`` additionally merges each segment's positions stream
-    (decode → per-posting-run tombstone mask → docid-order gather →
-    re-encode): the merged blob stays BLOCK-aligned with the merged
-    postings, so the block-selective decode phrase serving relies on works
-    on layout rows exactly as on segment rows."""
+    Per-task memory is one bucket's decoded columns (docids, tfs, doclens,
+    term codes, and positions when merged). Output is ordered by term and
+    equals a per-term merge byte for byte."""
     from .codec import (
-        decode_positions,
+        _varbyte_decode_grouped,
+        _varbyte_encode_offsets,
+        decode_positions_grouped,
+        decode_postings_grouped,
+        encode_blocks_grouped,
         encode_positions_grouped,
         gather_runs,
     )
     from .wand import _doc_meta
 
-    bucket = int(pdf["bucket"].iloc[0])
-    dels = DelIndex.from_pdf(pdf)
-    doc_tab = None
-    if with_doclens:
-        docs_rows = pdf[pdf["kind"] == "docs"]
-        if len(docs_rows):
-            doc_tab = _doc_meta(docs_rows)
-
+    bucket = int(pdf["bucket"].to_numpy()[0])
     posts = pdf[pdf["kind"] == "post"]
-    out_rows = []
-    for term, grp in posts.groupby("term", sort=True):
-        parts = []
-        for r in grp.itertuples():  # mask per generation, then merge
-            ids, tfs = decode_postings(r.postings)
-            if not with_doclens:
-                dls = np.ones(len(ids), np.int64)
-            elif r.doclens is not None and len(r.doclens):
-                dls = _varbyte_decode(r.doclens).astype(np.int64)
-            elif doc_tab is not None:
-                all_ids, all_lens = doc_tab
-                dls = all_lens[np.searchsorted(all_ids, ids)]
-            else:
+    terms, row_code = np.unique(posts["term"].to_numpy(dtype=object),
+                                return_inverse=True)
+    ids, tfs, counts = decode_postings_grouped(posts["postings"].tolist())
+    tfs = tfs.astype(np.int64)
+    code = np.repeat(row_code, counts)
+    if with_doclens:
+        vals, n_dl = _varbyte_decode_grouped(posts["doclens"].tolist())
+        has = n_dl > 0
+        if not np.array_equal(n_dl[has], counts[has]):
+            raise ValueError("doclen stream length does not match postings")
+        dls = np.empty(len(ids), dtype=np.int64)
+        from_stream = np.repeat(has, counts)
+        dls[from_stream] = vals
+        if not from_stream.all():
+            docs_rows = pdf[pdf["kind"] == "docs"]
+            if docs_rows.empty:
                 raise ValueError(
                     "post row carries no doclen stream and the bucket "
                     "holds no replicated doc tables — doclen source "
                     "missing (build/refresh wiring bug)"
                 )
-            flat = (decode_positions(r.positions, tfs)
-                    if with_positions else np.zeros(0, np.int64))
-            if dels:
-                keep = dels.keep_mask(int(r.gen), ids)
-                if with_positions:
-                    flat = flat[np.repeat(keep, tfs)]
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            parts.append((ids, tfs, dls, flat))
-        ids = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts]).astype(np.int64)
-        dls = np.concatenate([p[2] for p in parts]).astype(np.int64)
-        flat = np.concatenate([p[3] for p in parts]).astype(np.int64)
-        if len(parts) > 1:
-            order = np.argsort(ids, kind="stable")  # survivors stay disjoint
-            if with_positions:
-                flat = gather_runs(flat, tfs, order)
-            ids, tfs, dls = ids[order], tfs[order], dls[order]
-        if len(ids) == 0:
-            continue
-        buf, meta = encode_postings(ids, tfs, dls)
-        dl_buf = _varbyte_encode(dls.astype(np.uint64)) if with_doclens else b""
-        pos_buf = (encode_positions_grouped(
-            flat, tfs, np.array([0], np.int64), np.array([len(ids)], np.int64)
-        )[0] if with_positions else b"")
-        out_rows.append((bucket, term, int(len(ids)), int(tfs.sum()),
-                         buf, meta, dl_buf, pos_buf))
-    out = pd.DataFrame(
-        out_rows,
-        columns=["bucket", "term", "df", "cf",
-                 "postings", "blockmeta", "doclens", "positions"],
-    )
-    if not out_rows:  # bucket held only dels rows / fully-tombstoned terms
-        out = out.astype({"bucket": "int32", "df": "int64", "cf": "int64"})
-    return out
+            dls[~from_stream] = _doclens_from_docs(
+                *_doc_meta(docs_rows), ids[~from_stream])
+    else:
+        dls = np.ones(len(ids), dtype=np.int64)
+    flat = (decode_positions_grouped(posts["positions"].tolist(), tfs, counts)
+            if with_positions else None)
+
+    dels = DelIndex.from_pdf(pdf)
+    if dels:
+        gens = np.repeat(posts["gen"].to_numpy(dtype=np.int64), counts)
+        keep = np.ones(len(ids), dtype=bool)
+        for g in np.unique(gens):
+            sel = gens == g
+            keep[sel] = dels.keep_mask(g, ids[sel])
+        if with_positions:
+            flat = flat[np.repeat(keep, tfs)]
+        ids, tfs, dls, code = ids[keep], tfs[keep], dls[keep], code[keep]
+
+    order = np.lexsort((ids, code))
+    if with_positions:
+        flat = gather_runs(flat, tfs, order)
+    ids, tfs, dls, code = ids[order], tfs[order], dls[order], code[order]
+    if ((code[1:] == code[:-1]) & (ids[1:] <= ids[:-1])).any():
+        raise ValueError("docids must be strictly increasing")
+
+    # term runs; a bucket of only dels rows / fully-tombstoned terms has
+    # none and yields the typed empty frame
+    bounds = np.flatnonzero(np.diff(code, prepend=-1, append=-1))
+    starts, ends = bounds[:-1], bounds[1:]
+    postings, blockmeta = encode_blocks_grouped(ids, tfs, dls, starts, ends)
+    if with_doclens:
+        buf, val_ends = _varbyte_encode_offsets(dls.astype(np.uint64))
+        raw = buf.tobytes()
+        cut = np.concatenate([[0], val_ends])
+        doclens = [raw[a:b] for a, b in zip(cut[starts].tolist(),
+                                            cut[ends].tolist())]
+    else:
+        doclens = [b""] * len(starts)
+    positions = (encode_positions_grouped(flat, tfs, starts, ends)
+                 if with_positions else [b""] * len(starts))
+    # blob columns stay object dtype when empty (a bare [] reads as float)
+    return pd.DataFrame({
+        "bucket": np.full(len(starts), bucket, dtype=np.int32),
+        "term": terms[code[starts]],
+        "df": ends - starts,
+        "cf": np.add.reduceat(tfs, starts),
+        "postings": pd.Series(postings, dtype=object),
+        "blockmeta": pd.Series(blockmeta, dtype=object),
+        "doclens": pd.Series(doclens, dtype=object),
+        "positions": pd.Series(positions, dtype=object),
+    })
 
 
 def _layout_input_rows(

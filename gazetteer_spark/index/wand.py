@@ -44,7 +44,13 @@ from pyspark.sql import Window as W
 
 from .. import B, K1
 from ..analyzer import get_analyzer
-from .codec import DelIndex, decode_block_meta, decode_blocks, decode_postings
+from .codec import (
+    DelIndex,
+    decode_block_meta,
+    decode_blocks,
+    decode_postings,
+    decode_postings_grouped,
+)
 from .spimi import load_stats
 
 EPS = 1e-9
@@ -61,10 +67,9 @@ def _doc_meta(docs_rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     reference's `sortupdate/SortAndUpdateTask.java:36-85` semantics)."""
     ordered = (docs_rows.sort_values("gen") if "gen" in docs_rows.columns
                else docs_rows)
-    parts = [decode_postings(b) for b in ordered["postings"]]
-    all_ids = np.concatenate([p[0] for p in parts])
-    all_lens = np.concatenate([p[1] for p in parts]).astype(np.int64)
-    if len(parts) > 1:
+    all_ids, all_lens, _ = decode_postings_grouped(ordered["postings"].tolist())
+    all_lens = all_lens.astype(np.int64)
+    if len(ordered) > 1:
         order = np.argsort(all_ids, kind="stable")
         all_ids, all_lens = all_ids[order], all_lens[order]
         keep = np.ones(len(all_ids), dtype=bool)  # last of each run = newest

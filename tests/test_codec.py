@@ -10,11 +10,16 @@ from hypothesis import strategies as st
 from gazetteer_spark.index.codec import (
     BLOCK,
     _varbyte_decode,
+    _varbyte_decode_grouped,
     _varbyte_encode,
     decode_block_meta,
     decode_blocks,
+    decode_positions,
+    decode_positions_grouped,
     decode_postings,
+    decode_postings_grouped,
     encode_blocks_grouped,
+    encode_positions_grouped,
     encode_postings,
 )
 
@@ -159,3 +164,110 @@ def test_delindex_merges_duplicate_generations():
     assert d.mask_for(3).tolist() == [9]            # only newer gen masks
     keep = d.keep_mask(1, np.array([1, 3, 5, 8, 9]))
     assert keep.tolist() == [True, False, False, True, False]
+
+
+# ---- grouped decoders: each equals its per-blob counterpart -------------
+
+# list sizes straddling the 128-posting block boundary, plus small ones
+_SIZES = st.one_of(st.sampled_from([0, 1, 128, 129, 257]),
+                   st.integers(min_value=0, max_value=20))
+
+
+@st.composite
+def _posting_lists(draw, min_lists=0):
+    """[(docids, tfs)]: sorted unique docids (some ≥ 2^35, some negative
+    for the zigzag first value), tfs ≥ 1; empty lists included."""
+    lists = []
+    for _ in range(draw(st.integers(min_value=min_lists, max_value=6))):
+        n = draw(_SIZES)
+        rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+        base = draw(st.sampled_from([0, 2**35, 2**40 + 3, -(2**62)]))
+        ids = base + np.cumsum(rng.integers(1, 2**36, size=n))
+        lists.append((ids.astype(np.int64), rng.integers(1, 6, size=n)))
+    return lists
+
+
+def _positions_blob(ids, tfs, seed):
+    """A positions blob for one posting list → (blob, flat positions)."""
+    rng = np.random.default_rng(seed)
+    runs = [np.sort(rng.choice(4000, size=int(t), replace=False))
+            for t in tfs]
+    flat = np.concatenate(runs) if runs else np.zeros(0, np.int64)
+    blob = encode_positions_grouped(
+        flat, tfs, np.array([0], np.int64), np.array([len(ids)], np.int64))[0]
+    return blob, flat
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(st.lists(st.integers(min_value=0, max_value=2**64 - 1),
+                         max_size=40), max_size=8))
+def test_varbyte_decode_grouped_equals_per_buffer(groups):
+    bufs = [_varbyte_encode(np.array(g, dtype=np.uint64)) for g in groups]
+    vals, counts = _varbyte_decode_grouped(bufs + [None])
+    assert vals.tolist() == [v for b in bufs for v in _varbyte_decode(b).tolist()]
+    assert counts.tolist() == [len(g) for g in groups] + [0]
+
+
+@settings(max_examples=40, deadline=None)
+@given(_posting_lists())
+def test_decode_postings_grouped_equals_per_blob(lists):
+    bufs = [encode_postings(ids, tfs)[0] for ids, tfs in lists]
+    docids, tfs, counts = decode_postings_grouped(bufs)
+    want = [decode_postings(b) for b in bufs]
+    assert docids.tolist() == [d for w in want for d in w[0].tolist()]
+    assert tfs.tolist() == [t for w in want for t in w[1].tolist()]
+    assert counts.tolist() == [len(ids) for ids, _ in lists]
+
+
+@settings(max_examples=40, deadline=None)
+@given(_posting_lists(), st.integers(0, 2**32 - 1))
+def test_decode_positions_grouped_equals_per_blob(lists, seed):
+    blobs = [_positions_blob(ids, tfs, seed + i)[0]
+             for i, (ids, tfs) in enumerate(lists)]
+    all_tfs = np.concatenate([t for _, t in lists] + [np.zeros(0, np.int64)])
+    counts = np.array([len(ids) for ids, _ in lists], np.int64)
+    got = decode_positions_grouped(blobs, all_tfs, counts)
+    want = [p for b, (_, t) in zip(blobs, lists)
+            for p in decode_positions(b, t).tolist()]
+    assert got.tolist() == want
+
+
+@settings(max_examples=30, deadline=None)
+@given(_posting_lists(min_lists=2), st.integers(0, 2**32 - 1), st.data())
+def test_decode_positions_grouped_rejects_row_tf_mismatch(lists, seed, data):
+    """A row whose stream length differs from its tf sum raises, even when
+    another row's opposite error keeps the bucket's total equal."""
+    lists = [(ids, tfs) for ids, tfs in lists if len(ids)]
+    if len(lists) < 2:
+        lists = [(np.array([2**35, 2**35 + 9]), np.array([2, 1])),
+                 (np.array([5]), np.array([3]))]
+    blobs = [_positions_blob(ids, tfs, seed + i)[0]
+             for i, (ids, tfs) in enumerate(lists)]
+    a, b = data.draw(st.sampled_from([(0, 1), (1, 0)]))
+    bad = [t.copy() for _, t in lists]
+    bad[a][0] += 1
+    bad[b][0] += 1 if bad[b][0] == 1 else -1  # total off by 0 or 2
+    counts = np.array([len(ids) for ids, _ in lists], np.int64)
+    with pytest.raises(ValueError, match="tf sum"):
+        decode_positions_grouped(blobs, np.concatenate(bad), counts)
+    with pytest.raises(ValueError, match="tf sum"):
+        decode_positions(blobs[a], bad[a])
+
+
+def test_grouped_decoders_empty_input():
+    d, t, c = decode_postings_grouped([])
+    assert len(d) == len(t) == len(c) == 0
+    v, c = _varbyte_decode_grouped([b"", None])
+    assert len(v) == 0 and c.tolist() == [0, 0]
+    assert len(decode_positions_grouped([b"", None], np.zeros(0, np.int64),
+                                        np.zeros(2, np.int64))) == 0
+    with pytest.raises(ValueError, match="tf sum"):  # tfs but no stream
+        decode_positions_grouped([b""], np.array([2]), np.array([1]))
+
+
+def test_varbyte_decode_grouped_rejects_split_value():
+    """A buffer ending on a continuation byte would leak into the next
+    buffer's first value — refused, never silently re-framed."""
+    whole = _varbyte_encode(np.array([300], dtype=np.uint64))  # 2 bytes
+    with pytest.raises(ValueError, match="inside a value"):
+        _varbyte_decode_grouped([whole[:1], whole[1:]])

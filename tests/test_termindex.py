@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from gazetteer_spark.analyzer import postings_sql
-from gazetteer_spark.index import spimi, termindex
+from gazetteer_spark.index import codec, spimi, termindex
 
 
 @pytest.fixture(scope="module")
@@ -1168,3 +1170,272 @@ def test_term_meta_path_blobs_equals_arrow_job(spark, documents, layout,
     monkeypatch.setattr(termindex, "PROBE_BLOB_BUDGET", 0)
     assert termindex._term_meta_path_blobs(
         layout, meta, terms, termindex.INLINE_GATE_DF) is None
+
+
+# ---- Spark-free merge tests: _merge_bucket against a per-term oracle ----
+
+_LAYOUT_COLS = ["bucket", "term", "df", "cf", "postings", "blockmeta",
+                "doclens", "positions"]
+
+
+def _pos_runs(ids, tfs):
+    """Deterministic strictly increasing positions per posting."""
+    return [int(d) % 7 + 3 * np.arange(int(t)) for d, t in zip(ids, tfs)]
+
+
+def _post(term, gen, ids, tfs=None, stream=True, positions=True, bucket=3):
+    """One merge-input post row. ``stream`` attaches a per-posting doclen
+    stream (doclen = docid % 50 + 10 + gen); False leaves it NULL, as a
+    v2 or fielded source does."""
+    ids = np.array(ids, np.int64)
+    tfs = np.array(tfs if tfs is not None else [int(d) % 3 + 1 for d in ids],
+                   np.int64)
+    flat = np.concatenate(_pos_runs(ids, tfs))
+    return {
+        "bucket": bucket, "kind": "post", "term": term, "gen": gen,
+        "postings": codec.encode_postings(ids, tfs)[0],
+        "doclens": (codec._varbyte_encode((ids % 50 + 10 + gen)
+                                          .astype(np.uint64))
+                    if stream else None),
+        "positions": (codec.encode_positions_grouped(
+            flat, tfs, np.array([0]), np.array([len(ids)]))[0]
+            if positions else None),
+    }
+
+
+def _table(kind, gen, ids, vals=None, bucket=3):
+    """A replicated 'dels' or 'docs' row (docs: docid → doclen)."""
+    ids = np.array(ids, np.int64)
+    vals = np.ones(len(ids), np.int64) if vals is None else np.array(vals)
+    return {"bucket": bucket, "kind": kind, "term": None, "gen": gen,
+            "postings": codec.encode_postings(ids, vals)[0],
+            "doclens": None, "positions": None}
+
+
+def _frame(rows):
+    return pd.DataFrame(rows).astype({"bucket": "int32", "gen": "int32"})
+
+
+def _reference_merge(pdf, with_doclens, with_positions):
+    """Test oracle: one term at a time, one row at a time, with the
+    per-blob codec; survivors collected in a docid-keyed dict."""
+    from gazetteer_spark.index.wand import _doc_meta
+
+    dels = codec.DelIndex.from_pdf(pdf)
+    docs = pdf[pdf["kind"] == "docs"]
+    tab = _doc_meta(docs) if len(docs) else None
+    rows = []
+    for term, grp in pdf[pdf["kind"] == "post"].groupby("term", sort=True):
+        merged = {}
+        for r in grp.itertuples():
+            ids, tfs = codec.decode_postings(r.postings)
+            if not with_doclens:
+                dls = np.ones(len(ids), np.int64)
+            elif r.doclens:
+                dls = codec._varbyte_decode(r.doclens).astype(np.int64)
+            else:
+                dls = tab[1][np.searchsorted(tab[0], ids)]
+            runs = (np.split(codec.decode_positions(r.positions, tfs),
+                             np.cumsum(tfs)[:-1])
+                    if with_positions else [None] * len(ids))
+            keep = (dels.keep_mask(r.gen, ids) if dels
+                    else np.ones(len(ids), bool))
+            for d, t, dl, p, k in zip(ids, tfs, dls, runs, keep):
+                if k:
+                    assert int(d) not in merged
+                    merged[int(d)] = (int(t), int(dl), p)
+        if not merged:
+            continue
+        ids = np.array(sorted(merged), np.int64)
+        tfs = np.array([merged[d][0] for d in ids], np.int64)
+        dls = np.array([merged[d][1] for d in ids], np.int64)
+        buf, meta = codec.encode_postings(ids, tfs, dls)
+        rows.append((
+            int(pdf["bucket"].iloc[0]), term, len(ids), int(tfs.sum()),
+            buf, meta,
+            codec._varbyte_encode(dls.astype(np.uint64)) if with_doclens
+            else b"",
+            codec.encode_positions_grouped(
+                np.concatenate([merged[d][2] for d in ids]), tfs,
+                np.array([0]), np.array([len(ids)]))[0]
+            if with_positions else b"",
+        ))
+    return rows
+
+
+def _assert_merge_matches(rows, with_doclens, with_positions):
+    pdf = _frame(rows)
+    got = termindex._merge_bucket(pdf, with_doclens, with_positions)
+    assert list(got.columns) == _LAYOUT_COLS
+    want = _reference_merge(pdf, with_doclens, with_positions)
+    assert [tuple(r) for r in got.itertuples(index=False)] == want
+    return got
+
+
+@pytest.mark.parametrize("with_positions", [False, True])
+def test_merge_bucket_multi_term_multi_gen(with_positions):
+    """≥3 generations per term, interleaved docids, lists across the
+    128-posting block boundary, both with and without positions."""
+    rows = [
+        _post("beta", 1, range(0, 400, 2)),
+        _post("alpha", 1, [5, 9, 2**35]),
+        _post("beta", 2, range(1, 260, 2)),
+        _post("alpha", 4, [6, 2**35 + 1]),
+        _post("beta", 4, [401, 403, 10**12]),
+        _post("alpha", 2, [7]),
+        _post("gamma", 2, [1]),
+    ]
+    got = _assert_merge_matches(rows, True, with_positions)
+    assert got["term"].tolist() == ["alpha", "beta", "gamma"]
+    assert got["df"].tolist() == [6, 333, 1]
+
+
+def test_merge_bucket_fielded_without_doclens():
+    """A fielded v2 source: composite ``field\\x1fterm`` rows, no doclen
+    stream, merged with unit doclens and empty doclens blobs."""
+    rows = [
+        _post("body\x1fparse", 1, [1, 4, 9], stream=False, positions=False),
+        _post("path\x1fparse", 1, [4], stream=False, positions=False),
+        _post("body\x1fparse", 2, [12], stream=False, positions=False),
+        _post("body\x1findex", 2, [2, 3], stream=False, positions=False),
+    ]
+    got = _assert_merge_matches(rows, False, False)
+    assert set(got["doclens"]) == {b""} and set(got["positions"]) == {b""}
+
+
+@pytest.mark.parametrize("with_positions", [False, True])
+def test_merge_bucket_dels_mask_only_older_generations(with_positions):
+    """A del at gen g masks gen < g only; a re-add after the delete keeps
+    its newest posting (tf, doclen and positions of the re-add)."""
+    rows = [
+        _post("alpha", 1, [1, 2, 3, 5]),
+        _table("dels", 2, [2, 5, 7]),
+        _post("alpha", 3, [7]),            # newer than the del: survives
+        _post("alpha", 3, [5], tfs=[4]),   # re-add of a deleted docid
+        _post("beta", 1, [2]),             # fully tombstoned term
+        _table("dels", 2, [3]),            # same-gen dels rows merge
+    ]
+    got = _assert_merge_matches(rows, True, with_positions)
+    assert got["term"].tolist() == ["alpha"]
+    ids, tfs = codec.decode_postings(got["postings"][0])
+    assert ids.tolist() == [1, 5, 7] and tfs.tolist() == [2, 4, 2]
+
+
+@pytest.mark.parametrize("with_positions", [False, True])
+def test_merge_bucket_refresh_rows(with_positions):
+    """Refresh input: existing merged layout rows labelled with the
+    layout's max_source_gen (3), plus a delta of adds, a re-add and a
+    del that masks some existing postings."""
+    rows = [
+        _post("alpha", 3, [1, 4, 8, 2**36]),     # existing layout rows
+        _post("beta", 3, list(range(0, 300, 3))),
+        _post("alpha", 4, [2, 9]),
+        _table("dels", 5, [4, 9, 30]),
+        _post("beta", 5, [30]),                   # re-add in the del's gen
+        _post("delta", 5, [3]),
+    ]
+    _assert_merge_matches(rows, True, with_positions)
+
+
+@pytest.mark.parametrize("with_positions", [False, True])
+def test_merge_bucket_replicated_doc_tables(with_positions):
+    """v2 post rows (no stream) resolve doclens from the replicated doc
+    tables, latest generation winning; stream rows keep their own."""
+    rows = [
+        _post("alpha", 1, [1, 5, 9], stream=False),
+        _post("alpha", 2, [11], stream=False),
+        _post("beta", 2, [5, 11], stream=False),
+        _post("beta", 3, [20]),                   # a v3 row in the bucket
+        _table("docs", 1, [1, 5, 9], [10, 50, 90]),
+        _table("docs", 2, [5, 11], [55, 110]),    # 5 re-added: 55 wins
+        _table("dels", 2, [5]),
+    ]
+    got = _assert_merge_matches(rows, True, with_positions)
+    assert codec._varbyte_decode(got["doclens"][0]).tolist() == [10, 90, 110]
+
+
+@pytest.mark.parametrize("rows", [
+    [_post("alpha", 1, [1, 2]), _table("dels", 2, [1, 2])],
+    [_table("dels", 2, [1, 2])],
+], ids=["all_tombstoned", "dels_only"])
+def test_merge_bucket_empty_is_typed(rows):
+    got = termindex._merge_bucket(_frame(rows), True, True)
+    assert list(got.columns) == _LAYOUT_COLS and len(got) == 0
+    assert got.dtypes.astype(str).tolist() == [
+        "int32", "object", "int64", "int64",
+        "object", "object", "object", "object"]
+
+
+def test_merge_bucket_rejects_duplicate_docid():
+    """Two surviving postings of one docid under one term (overlapping
+    generations without a del) are a corrupt input, not a merge."""
+    rows = [_post("alpha", 1, [1, 2]), _post("alpha", 2, [2, 3])]
+    with pytest.raises(ValueError, match="strictly increasing"):
+        termindex._merge_bucket(_frame(rows), True, False)
+
+
+def _maxpos_blob():
+    """A hand-built one-posting positions blob holding position MAXPOS
+    (the encoder refuses to write one)."""
+    stream = codec._varbyte_encode(np.array([codec.MAXPOS], np.uint64))
+    return (np.uint32(1).tobytes() + np.int64(len(stream)).tobytes()
+            + stream)
+
+
+def test_merge_bucket_checks_positions_and_maxpos():
+    short = _post("alpha", 1, [1, 2], tfs=[1, 1])
+    short["positions"] = _post("alpha", 1, [1], tfs=[1])["positions"]
+    with pytest.raises(ValueError, match="tf sum"):
+        termindex._merge_bucket(_frame([short]), True, True)
+    big = _post("alpha", 1, [1], tfs=[1])
+    big["positions"] = _maxpos_blob()
+    with pytest.raises(ValueError, match="MAXPOS"):
+        termindex._merge_bucket(_frame([big]), True, True)
+
+
+@pytest.mark.parametrize("missing", [6, 100], ids=["mid_table", "past_end"])
+def test_merge_bucket_docid_absent_from_doc_tables(missing):
+    rows = [_post("alpha", 1, [1, missing], stream=False),
+            _table("docs", 1, [1, 5, 9], [10, 50, 90])]
+    with pytest.raises(ValueError, match="doclen source missing"):
+        termindex._merge_bucket(_frame(rows), True, False)
+    with pytest.raises(ValueError, match="doclen source missing"):
+        termindex._merge_bucket(_frame(rows[:1]), True, False)
+
+
+@pytest.mark.parametrize("missing", [6, 100], ids=["mid_table", "past_end"])
+def test_resolve_doclens_shard_docid_absent_from_doc_tables(missing):
+    rows = [_post("alpha", 1, [1, 5], stream=False),
+            _post("beta", 1, [1, missing], stream=False),
+            _table("docs", 1, [1, 5, 9], [10, 50, 90])]
+    pdf = _frame(rows).drop(columns="bucket")
+    ok = termindex._resolve_doclens_shard(pdf.iloc[[0, 2]])
+    assert codec._varbyte_decode(ok["doclens"][0]).tolist() == [10, 50]
+    with pytest.raises(ValueError, match="doclen source missing"):
+        termindex._resolve_doclens_shard(pdf)
+
+
+def test_merge_bucket_makes_no_per_term_codec_call(monkeypatch):
+    """The merge decodes and encodes a bucket in grouped calls; a per-term
+    or per-row codec call creeping back in fails here (no timing)."""
+    rows = [
+        _post(f"t{i:02d}", g, range(2 * i + g % 2, 600, 2 + 2 * g))
+        for i in range(12) for g in (1, 2)
+    ] + [_post("zz", 2, [4, 8], stream=False),
+         _table("docs", 2, [4, 8], [40, 80]),
+         _table("dels", 2, [6, 9]),
+         _table("dels", 3, [7])]
+    pdf = _frame(rows)
+    want = _reference_merge(pdf, True, True)
+
+    def boom(*a, **k):
+        raise AssertionError("per-term codec call in _merge_bucket")
+
+    for mod in (codec, termindex):
+        for name in ("decode_postings", "decode_positions", "encode_postings",
+                     "_varbyte_decode", "_varbyte_encode"):
+            if hasattr(mod, name):
+                monkeypatch.setattr(mod, name, boom)
+    got = termindex._merge_bucket(pdf, True, True)
+    assert [tuple(r) for r in got.itertuples(index=False)] == want
+    assert len(got) == 13
