@@ -9,7 +9,7 @@ Runs the engine's headline operations at $SPARK_GRAFT_SF_DIR (default
 - exact_batch:   exact (non-index) DataFrame BM25 for the same batch
 - tokens_agg:    analyzer+postings aggregation throughput
 - layout_build / layout_bm25_batch: term-partitioned layout build +
-  the same batch served warm from it (TermLayoutReader, one job/pass)
+  the same batch served through a TermLayoutReader (bucket-pruned reads)
 - pos_layout_build / layout_phrase_batch: POSITIONAL term layout build
   + the phrase batch served from O(query terms) buckets
 
@@ -170,7 +170,7 @@ def main():
 
         # round-5 serving path: BM25 from the term-partitioned layout —
         # build the layout from the committed index, then the same 6-query
-        # batch warm (terms table pinned, df memoized → one job per pass)
+        # batch through a reader (bucket-pruned reads, driver-side df probe)
         from gazetteer_spark.index import termindex
 
         lay = f"{idx_dir}/layout"
@@ -180,7 +180,7 @@ def main():
             passes=1,
         )
         lreader = termindex.TermLayoutReader(spark, lay)
-        lreader.topk(QUERIES, k=10).collect()  # warm the cache
+        lreader.topk(QUERIES, k=10).collect()  # warm-up pass
         timings["layout_bm25_batch"] = _measure(
             lambda: lreader.topk(QUERIES, k=10).collect(), passes=4
         )
@@ -258,8 +258,8 @@ def main():
 
         timings["frontdoor_batch"] = _measure(frontdoor_pass, passes=3)
 
-        # warm batched front door: 3 trees ONE filter job family + ONE
-        # scoring job off the reader's pinned terms table
+        # batched front door through a reader: 3 trees, ONE filter job
+        # family + ONE scoring job over the bucket-pruned layout reads
         frontdoor_qs = [
             (0, '(customer AND filter AND NOT group) OR "key order"'),
             (1, "spark AND (join OR merge)"),

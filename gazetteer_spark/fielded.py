@@ -264,7 +264,7 @@ def _fielded_source(docs, id_col, fields, analyzer, n_shards,
 def _refresh_field_stats(spark: SparkSession, out_dir: str) -> None:
     """Per-field total token counts from termstats (composite-term cf sums)
     → stats.json field_totals; avglen_f = total_f / n_docs at query time."""
-    ts = spark.read.parquet(f"{out_dir}/termstats")
+    ts = spimi.load_termstats(spark, out_dir)
     rows = (
         ts.groupBy(F.split(F.col("term"), FIELD_SEP, 2).getItem(0).alias("field"))
         .agg(F.sum("cf").alias("total"))

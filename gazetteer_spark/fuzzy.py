@@ -111,7 +111,7 @@ def build_fuzzy_layout(
     with open(f"{index_dir}/build.json") as f:
         params = json.load(f)
     os.makedirs(out_dir, exist_ok=True)
-    ts = spark.read.parquet(f"{index_dir}/termstats")
+    ts = spimi.load_termstats(spark, index_dir)
     if params.get("fields"):
         ts = (
             ts.select(
@@ -125,7 +125,7 @@ def build_fuzzy_layout(
         term_id_expr(F.col("term")).alias("term_id"), "term", "df"
     )
     terms.write.mode("overwrite").parquet(f"{out_dir}/terms")
-    dict_df = spark.read.parquet(f"{out_dir}/terms")
+    dict_df = _dict_table(spark, out_dir)
     spimi.build_index(
         spark, dict_df, f"{out_dir}/gramidx", n_shards=n_shards,
         id_col="term_id", content_col="term", analyzer="ngram3",
@@ -149,6 +149,16 @@ def build_fuzzy_layout(
     with open(tmp, "w") as f:
         json.dump(meta, f)
     os.replace(tmp, f"{out_dir}/layout.json")
+
+
+# the dictionary table build_fuzzy_layout writes (term_id = xxhash64)
+DICT_SCHEMA = "term_id long, term string, df long"
+
+
+def _dict_table(spark: SparkSession, fuzzy_dir: str) -> DataFrame:
+    """The fuzzy layout's dictionary table, read with its fixed schema
+    (no schema-inference job)."""
+    return spark.read.schema(DICT_SCHEMA).parquet(f"{fuzzy_dir}/terms")
 
 
 def _grams_of(fragment: str) -> list[str]:
@@ -210,7 +220,7 @@ def fuzzy_terms(
         )
     frag = toks[0]
     grams = _grams_of(frag)
-    terms_tbl = spark.read.parquet(f"{fuzzy_dir}/terms")
+    terms_tbl = _dict_table(spark, fuzzy_dir)
 
     verify = F.col("term").contains(F.lit(frag))
     if bidirectional:
@@ -294,7 +304,7 @@ def fuzzy_terms_edit(
             f"{word!r} → {toks}"
         )
     w = toks[0]
-    terms_tbl = spark.read.parquet(f"{fuzzy_dir}/terms")
+    terms_tbl = _dict_table(spark, fuzzy_dir)
     verify = F.levenshtein(F.col("term"), F.lit(w)) <= max_edits
     grams = _grams_of(w)
     min_shared = len(grams) - max_edits * NGRAM_N
@@ -382,7 +392,7 @@ def fuzzy_terms_edit_batch(
             fallback.append((int(wid), w, int(max_edits)))
         else:
             specs.append((int(wid), grams, min_shared))
-    terms_tbl = spark.read.parquet(f"{fuzzy_dir}/terms")
+    terms_tbl = _dict_table(spark, fuzzy_dir)
     wdf = spark.createDataFrame(
         [(i, w, e) for i, (w, e) in sorted(norm.items())],
         "word_id int, word string, max_edits int",

@@ -481,7 +481,7 @@ def phrase_topk_batch(
     """(query_id, rank, docid, score): N RANKED phrase queries in one
     scoring job + one top-k window — the batch twin of :func:`phrase_topk`
     (rank-identical per query)."""
-    from .spimi import load_stats
+    from .spimi import load_stats, load_termstats
     from .wand import _idf, _lookup_dfs
 
     params, seg = _positional_segments(spark, index_dir)
@@ -491,7 +491,7 @@ def phrase_topk_batch(
     if any(not ts for _, ts in plans):
         raise ValueError("empty phrase after analysis")
     all_terms = sorted({t for _, ts in plans for t in ts})
-    termstats = spark.read.parquet(f"{index_dir}/termstats")
+    termstats = load_termstats(spark, index_dir)
     df_by_term = _lookup_dfs(termstats, all_terms)
     qweights = {t: _idf(stats["n_docs"], df_by_term[t])
                 for t in all_terms if t in df_by_term}
@@ -552,7 +552,7 @@ def phrase_topk(
     phrase candidates and their tfs come from the same block-selective
     decode, doclens from the shard's docmeta, df/avgdl from the committed
     stats — one scoring job + the global top-k window."""
-    from .spimi import load_stats
+    from .spimi import load_stats, load_termstats
     from .wand import _idf, _lookup_dfs
 
     params, seg = _positional_segments(spark, index_dir)
@@ -561,7 +561,7 @@ def phrase_topk(
     terms = tokenize(phrase)
     if not terms:
         raise ValueError("empty phrase after analysis")
-    termstats = spark.read.parquet(f"{index_dir}/termstats")
+    termstats = load_termstats(spark, index_dir)
     df_by_term = _lookup_dfs(termstats, sorted(set(terms)))
     if any(t not in df_by_term for t in terms):
         return spark.createDataFrame([], "rank int, docid long, score double")

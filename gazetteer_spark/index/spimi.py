@@ -1058,8 +1058,15 @@ def _commit_manifest(
     os.replace(tmp, f"{out_dir}/manifest/{name}.parquet")
 
 
+# both termstats writers (the driver-side Arrow fold and the distributed
+# groupBy) emit exactly these columns and types
+TERMSTATS_SCHEMA = "term string, df long, cf long"
+
+
 def load_termstats(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/termstats")
+    """The global (term, df, cf) table, read with its fixed schema (no
+    schema-inference job)."""
+    return spark.read.schema(TERMSTATS_SCHEMA).parquet(f"{out_dir}/termstats")
 
 
 def load_stats(out_dir: str) -> dict:

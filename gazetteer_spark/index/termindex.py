@@ -509,12 +509,23 @@ def _buckets_for(spark: SparkSession, terms: list[str], n_buckets: int) -> list[
     })
 
 
+def _read_terms(spark: SparkSession, layout_dir: str) -> DataFrame:
+    """The committed layout's terms table, read with its declared schema:
+    a parquet read without one launches a 1-task schema-inference job
+    every time. Every layout writer emits all TERM_LAYOUT_SCHEMA columns
+    (a layout without positions holds empty position streams)."""
+    return spark.read.schema(TERM_LAYOUT_SCHEMA).parquet(f"{layout_dir}/terms")
+
+
 def _pruned_rows(
     spark: SparkSession, layout_dir: str, meta: dict, terms: list[str]
 ) -> DataFrame:
+    """Layout rows of ``terms``: bucket partition pruning plus parquet
+    min/max pruning on term. Composite ``field\\x1fterm`` inputs prune by
+    their base term's bucket (see _buckets_for)."""
     buckets = _buckets_for(spark, terms, meta["n_buckets"])
     return (
-        spark.read.parquet(f"{layout_dir}/terms")
+        _read_terms(spark, layout_dir)
         .filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
     )
 
@@ -528,14 +539,8 @@ def term_postings(
     Refuses a stale snapshot unless ``allow_stale`` (see _check_stale)."""
     meta = _load_meta(layout_dir)
     _check_stale(meta, allow_stale)
-    rows = _pruned_rows(spark, layout_dir, meta, terms)
-    return _decode_posting_rows(rows)
-
-
-def _decode_posting_rows(rows: DataFrame) -> DataFrame:
-    """(term, docid, tf) from layout rows (pruned scan or a reader's
-    pinned table), decoded Arrow-batched."""
-    rows = rows.select("term", "postings")
+    rows = _pruned_rows(spark, layout_dir, meta, terms).select(
+        "term", "postings")
 
     def decode(iterator):
         for pdf in iterator:
@@ -772,8 +777,17 @@ def bm25_topk(
     phase-1 cheap scoring is filtered too: θ₀ is then the k-th best
     partial score among FILTERED docs, so a filtered doc holding only
     expensive terms is excluded by the same bound argument, and every
-    emitted survivor still receives its exact full score."""
+    emitted survivor still receives its exact full score.
+
+    ``qweights``: per-query term boosts ({qid: {term: w}}, missing = 1.0)
+    — each term's contribution is multiplied by its weight in BOTH gating
+    phases and the final score, so the gate's bound argument holds
+    verbatim with weighted idf upper bounds. ``mask_parts``/``mask_pred``:
+    the fused front-door filter (see _scored_rows) — applied in BOTH the
+    gating phase and the final job, so θ₀ is the k-th best partial among
+    tree-matching docs and the gate stays exact, as with filter_by."""
     from ..analyzer import get_analyzer
+    from .wand import _idf
 
     meta = _load_meta(layout_dir)
     if not meta.get("has_doclens"):
@@ -798,60 +812,6 @@ def bm25_topk(
     # bucket files — no metadata Spark job (see _term_meta_path)
     df_by_term = _term_meta_path(layout_dir, meta, all_terms)
     _check_qweights(qweights)
-    return _bm25_impl(spark, rows, meta, df_by_term, qterms, k, round_to,
-                      expensive_df, filter_by=filter_by, qweights=qweights,
-                      mask_parts=mask_parts, mask_pred=mask_pred)
-
-
-def _check_qweights(qweights) -> None:
-    """Boost weights must be strictly positive — the MaxScore gate's
-    upper-bound argument (and BM25's monotonicity) assume non-negative
-    contributions, and a zero weight should be expressed by dropping the
-    term from the scoring subscription instead."""
-    for qid, tw in (qweights or {}).items():
-        for t, w in tw.items():
-            if not (float(w) > 0.0):
-                raise ValueError(
-                    f"term weight must be > 0: query {qid} term {t!r} "
-                    f"has {w}"
-                )
-
-
-def _apply_filter(df: DataFrame, filter_by: DataFrame) -> DataFrame:
-    """Semi-join a filter onto scored rows. One docid column = one shared
-    filter for every query; a (query_id, docid) filter (e.g. from
-    `query.match_layout_batch`) restricts each query independently."""
-    keys = (["query_id", "docid"] if "query_id" in filter_by.columns
-            else ["docid"])
-    return df.join(filter_by, keys, "left_semi")
-
-
-def _bm25_impl(
-    spark: SparkSession,
-    rows: DataFrame,
-    meta: dict,
-    df_by_term: dict[str, int],
-    qterms: dict[int, list[str]],
-    k: int,
-    round_to: int | None,
-    expensive_df: int | None,
-    filter_by: DataFrame | None = None,
-    qweights: dict[int, dict[str, float]] | None = None,
-    mask_parts: list[DataFrame] | None = None,
-    mask_pred=None,
-) -> DataFrame:
-    """Shared scoring pipeline behind bm25_topk and TermLayoutReader.topk:
-    candidate-gate planning + scoring jobs + the group-limited merge.
-    ``filter_by`` semantics: see bm25_topk. ``qweights``: per-query term
-    boosts ({qid: {term: w}}, missing = 1.0) — each term's contribution
-    is multiplied by its weight in BOTH gating phases and the final
-    score, so the candidate gate's bound argument holds verbatim with
-    weighted idf upper bounds. ``mask_parts``/``mask_pred``: the fused
-    front-door filter (see _scored_rows) — applied in BOTH the gating
-    phase and the final job, so θ₀ is the k-th best partial among
-    tree-matching docs and the gate stays exact, the same argument as
-    filter_by."""
-    from .wand import _idf
 
     assert not (mask_parts and filter_by is not None)
     # kwargs passed only when fusing — unfused calls keep the historical
@@ -953,6 +913,29 @@ def _bm25_impl(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "docid", "score")
     )
+
+
+def _check_qweights(qweights) -> None:
+    """Boost weights must be strictly positive — the MaxScore gate's
+    upper-bound argument (and BM25's monotonicity) assume non-negative
+    contributions, and a zero weight should be expressed by dropping the
+    term from the scoring subscription instead."""
+    for qid, tw in (qweights or {}).items():
+        for t, w in tw.items():
+            if not (float(w) > 0.0):
+                raise ValueError(
+                    f"term weight must be > 0: query {qid} term {t!r} "
+                    f"has {w}"
+                )
+
+
+def _apply_filter(df: DataFrame, filter_by: DataFrame) -> DataFrame:
+    """Semi-join a filter onto scored rows. One docid column = one shared
+    filter for every query; a (query_id, docid) filter (e.g. from
+    `query.match_layout_batch`) restricts each query independently."""
+    keys = (["query_id", "docid"] if "query_id" in filter_by.columns
+            else ["docid"])
+    return df.join(filter_by, keys, "left_semi")
 
 
 def _scored_fielded(
@@ -1088,7 +1071,8 @@ def bm25f_topk(
     rank-identical to fielded.fielded_topk / fielded.bm25f_topk on a
     current layout. ``filter_by`` restricts to a docid DataFrame BEFORE
     the top-k cut with the gate kept sound — same contract as
-    :func:`bm25_topk`.
+    :func:`bm25_topk`; so is ``mask_parts``/``mask_pred``, the fused
+    front-door filter (see _scored_fielded), applied in BOTH phases.
 
     Requires a layout built from a ``build_fielded_index(...,
     doclens=True)`` source: composite ``field\\x1fterm`` rows carry a
@@ -1146,45 +1130,12 @@ def bm25f_topk(
         raise ValueError("no query terms")
     boosts = dict(boosts or {})
     comp = [f + FIELD_SEP + t for f in meta["fields"] for t in all_terms]
-    buckets = _buckets_for(spark, all_terms, meta["n_buckets"])
-    rows = (
-        spark.read.parquet(f"{layout_dir}/terms")
-        .filter(F.col("bucket").isin(buckets) & F.col("term").isin(comp))
-    )
+    rows = _pruned_rows(spark, layout_dir, meta, comp)
     # per-composite df via the driver-side bucket probe — no metadata job
     comp_df = _term_meta_path(layout_dir, meta, comp)
-    return _bm25f_impl(spark, rows, meta, comp_df, qterms, boosts, k,
-                       round_to, expensive_df, filter_by=filter_by,
-                       mask_parts=mask_parts, mask_pred=mask_pred)
-
-
-def _bm25f_impl(
-    spark: SparkSession,
-    rows: DataFrame,
-    meta: dict,
-    comp_df: dict[str, int],
-    qterms: dict[int, list[str]],
-    boosts: dict[str, float],
-    k: int,
-    round_to: int | None,
-    expensive_df: int | None,
-    filter_by: DataFrame | None = None,
-    mask_parts: list[DataFrame] | None = None,
-    mask_pred=None,
-) -> DataFrame:
-    """Shared fielded scoring pipeline behind bm25f_topk and
-    FieldedLayoutReader.topk: candidate-gate planning over per-composite
-    dfs + scoring jobs + the group-limited merge. ``filter_by``
-    semantics: see bm25_topk (phase-1 cheap scoring filtered too, so θ₀
-    is the k-th best partial among FILTERED docs — gate stays exact).
-    ``mask_parts``/``mask_pred``: the fused front-door filter (see
-    _scored_fielded / _scored_rows) — applied in BOTH phases, same
-    exactness argument."""
-    from .spimi import FIELD_SEP
-    from .wand import _idf
 
     assert not (mask_parts and filter_by is not None)
-    # kwargs passed only when fusing (see _bm25_impl — spy-compat)
+    # kwargs passed only when fusing (see bm25_topk — spy-compat)
     _mask_kw = ({"mask_parts": mask_parts, "mask_pred": mask_pred}
                 if mask_parts else {})
 
@@ -1238,7 +1189,7 @@ def _bm25f_impl(
                                     n_docs, **_mask_kw)
         if filter_by is not None:
             phase1_df = _apply_filter(phase1_df, filter_by)
-        # Arrow transfer + vectorized partition (see _bm25_impl)
+        # Arrow transfer + vectorized partition (see bm25_topk)
         p1 = phase1_df.toPandas()
         qids_a = p1["query_id"].to_numpy()
         docs_a = p1["docid"].to_numpy(dtype=np.int64)
@@ -1285,14 +1236,17 @@ def _bm25f_impl(
 
 
 class TermLayoutReader:
-    """Warm serving handle over the term-partitioned layout: the merged
-    terms table pinned in executor memory (MEMORY_AND_DISK) and per-term
-    df memoized driver-side, so a warm ranked query runs exactly ONE
-    Spark job (plus the cheap-only gating job when the candidate gate
-    engages) — the layout twin of wand.IndexReader / FieldedReader.
+    """Serving handle over ONE committed term layout directory. It holds
+    driver-side state only: the layout's ``meta``, checked for staleness
+    once at open. Every call runs the cold bucket-pruned path — :func:`bm25_topk`,
+    `query.match_layout_batch`, `query.search_batch` — on that directory,
+    so nothing is cached in Spark and an open reader never changes the
+    plan of any other query.
 
-    Staleness vs the source index is checked once at open (the handle
-    serves a fixed snapshot by design; reopen after rebuilds)."""
+    Contract: the reader serves the layout directory it was opened on,
+    whatever the source index commits afterwards. A refresh
+    (:func:`refresh_term_layout`) writes a NEW layout directory, which a
+    new reader opens."""
 
     def __init__(self, spark: SparkSession, layout_dir: str,
                  allow_stale: bool = False):
@@ -1305,104 +1259,44 @@ class TermLayoutReader:
                 "layout (fielded layouts serve through bm25f_topk)"
             )
         _check_stale(self.meta, allow_stale)
-        self.table = spark.read.parquet(f"{layout_dir}/terms").persist()
-        self.table.count()  # materialize the cache
-        self._df_cache: dict[str, int | None] = {}  # None = known-absent
-
-    def _dfs_for(self, terms: list[str]) -> dict[str, int]:
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            found = {r["term"]: int(r["df"]) for r in
-                     self.table.filter(F.col("term").isin(missing))
-                     .select("term", "df").collect()}
-            for t in missing:
-                self._df_cache[t] = found.get(t)
-        return {t: v for t in terms if (v := self._df_cache[t]) is not None}
 
     def topk(self, queries: list[tuple[int, str]], k: int = 10,
              round_to: int | None = 4,
              expensive_df: int | None = None) -> DataFrame:
-        from ..analyzer import get_analyzer
-
-        tokenize = get_analyzer(self.meta["analyzer"]).py_tokenize
-        qterms = {int(qid): sorted(set(tokenize(text)))
-                  for qid, text in queries}
-        all_terms = sorted({t for ts in qterms.values() for t in ts})
-        if not all_terms:
-            raise ValueError("no query terms")
-        df_by_term = self._dfs_for(all_terms)
-        present = sorted(df_by_term)
-        # the persisted table replaces disk-side pruning; the term filter
-        # still narrows the in-memory columnar scan
-        rows = self.table.filter(F.col("term").isin(present or all_terms))
-        return _bm25_impl(self.spark, rows, self.meta, df_by_term, qterms,
-                          k, round_to, expensive_df)
+        return bm25_topk(self.spark, self.layout_dir, queries, k=k,
+                         round_to=round_to, allow_stale=True,
+                         expensive_df=expensive_df)
 
     def match(self, queries: list[tuple[int, object]],
               fuzzy_dir: str | None = None,
               expansions_cache: dict | None = None) -> DataFrame:
-        """(query_id, docid): warm `query.match_layout_batch` — term-class
-        AND positional leaves decode from the PINNED terms table instead
-        of fresh pruned disk scans (the persisted relation materializes
-        every column, positions included, so warm phrase/NEAR leaves no
-        longer re-read segment files — round-5 verdict item #5)."""
-        from ..query import _match_batch_impl
+        """(query_id, docid): `query.match_layout_batch` on this layout."""
+        from ..query import match_layout_batch
 
-        return _match_batch_impl(self.spark, self.meta, self.layout_dir,
-                                 queries, fuzzy_dir, True,
-                                 table=self.table,
-                                 expansions_cache=expansions_cache)
+        return match_layout_batch(self.spark, self.layout_dir, queries,
+                                  fuzzy_dir=fuzzy_dir, allow_stale=True,
+                                  expansions_cache=expansions_cache)
 
     def search(self, queries: list[tuple[int, str]], k: int = 10,
                fuzzy_dir: str | None = None, round_to: int | None = 4,
                expensive_df: int | None = None) -> DataFrame:
-        """(query_id, rank, docid, score): warm `query.search_batch` —
-        the per-query boolean filters AND the BM25 scoring rows both come
-        from the pinned table; a warm batch is one filter job family +
-        one scoring job."""
-        from ..analyzer import get_analyzer
-        from ..query import _scored_query_terms
+        """(query_id, rank, docid, score): `query.search_batch` on this
+        layout."""
+        from ..query import search_batch
 
-        from ..query import _compile_mask_parts
-
-        tokenize = get_analyzer(self.meta["analyzer"]).py_tokenize
-        exp_cache: dict = {}
-        plans, scored_by_qid, weights = _scored_query_terms(
-            self.spark, self.meta, fuzzy_dir, queries, tokenize,
-            expansions_cache=exp_cache)
-        if not plans:
-            return self.spark.createDataFrame(
-                [], "query_id int, rank int, docid long, score double")
-        # FUSED tail: mask rows from the pinned table join the scoring
-        # aggregation — one shuffle, no filter-agg + semi-join pair
-        parts, pred = _compile_mask_parts(
-            self.spark, self.meta, self.layout_dir, plans, fuzzy_dir,
-            True, self.table, exp_cache)
-        qterms = {qid: sorted(set(text.split()))
-                  for qid, text in scored_by_qid.items()}
-        all_terms = sorted({t for ts in qterms.values() for t in ts})
-        df_by_term = self._dfs_for(all_terms)
-        rows = self.table.filter(
-            F.col("term").isin(sorted(df_by_term) or all_terms))
-        return _bm25_impl(self.spark, rows, self.meta, df_by_term, qterms,
-                          k, round_to, expensive_df,
-                          qweights=weights or None,
-                          mask_parts=parts, mask_pred=pred)
+        return search_batch(
+            self.spark, self.layout_dir, queries, k=k, fuzzy_dir=fuzzy_dir,
+            round_to=round_to, allow_stale=True, expensive_df=expensive_df)
 
     def close(self) -> None:
-        self.table.unpersist()
+        pass
 
 
 class FieldedLayoutReader:
-    """Warm serving handle over a FIELDED term-partitioned layout: the
-    merged composite-term table pinned in executor memory and per-
-    composite df memoized driver-side, so a warm BM25F query runs ONE
-    scoring job (plus the cheap-only gating job when the candidate gate
-    engages) — the fielded twin of :class:`TermLayoutReader` and the
-    layout twin of fielded.FieldedReader.
-
-    Staleness vs the source index is checked once at open (the handle
-    serves a fixed snapshot by design; reopen after rebuilds)."""
+    """Serving handle over ONE committed FIELDED term layout directory —
+    the fielded twin of :class:`TermLayoutReader`: ``meta`` checked for
+    staleness once at open, every :meth:`topk` the cold bucket-pruned
+    :func:`bm25f_topk` on that directory, nothing cached in Spark."""
 
     def __init__(self, spark: SparkSession, layout_dir: str,
                  allow_stale: bool = False):
@@ -1420,44 +1314,17 @@ class FieldedLayoutReader:
                 "to serve ranked BM25F from the layout"
             )
         _check_stale(self.meta, allow_stale)
-        self.table = spark.read.parquet(f"{layout_dir}/terms").persist()
-        self.table.count()  # materialize the cache
-        self._df_cache: dict[str, int | None] = {}  # None = known-absent
-
-    def _dfs_for(self, comps: list[str]) -> dict[str, int]:
-        missing = [c for c in comps if c not in self._df_cache]
-        if missing:
-            found = {r["term"]: int(r["df"]) for r in
-                     self.table.filter(F.col("term").isin(missing))
-                     .select("term", "df").collect()}
-            for c in missing:
-                self._df_cache[c] = found.get(c)
-        return {c: v for c in comps if (v := self._df_cache[c]) is not None}
 
     def topk(self, queries: list[tuple[int, str]],
              boosts: dict[str, float] | None = None, k: int = 10,
              round_to: int | None = 4,
              expensive_df: int | None = None) -> DataFrame:
-        from ..analyzer import get_analyzer
-        from .spimi import FIELD_SEP
-
-        tokenize = get_analyzer(self.meta["analyzer"]).py_tokenize
-        qterms = {int(qid): sorted(set(tokenize(text)))
-                  for qid, text in queries}
-        all_terms = sorted({t for ts in qterms.values() for t in ts})
-        if not all_terms:
-            raise ValueError("no query terms")
-        comp = [f + FIELD_SEP + t
-                for f in self.meta["fields"] for t in all_terms]
-        comp_df = self._dfs_for(comp)
-        # the persisted table replaces disk-side pruning; the composite
-        # filter still narrows the in-memory columnar scan
-        rows = self.table.filter(F.col("term").isin(sorted(comp_df) or comp))
-        return _bm25f_impl(self.spark, rows, self.meta, comp_df, qterms,
-                           dict(boosts or {}), k, round_to, expensive_df)
+        return bm25f_topk(self.spark, self.layout_dir, queries, boosts=boosts,
+                          k=k, round_to=round_to, allow_stale=True,
+                          expensive_df=expensive_df)
 
     def close(self) -> None:
-        self.table.unpersist()
+        pass
 
 
 def bm25_and_topk(
@@ -1874,25 +1741,18 @@ def _positional_prologue(
     meta: dict,
     plans_all: list[tuple[int, list[str]]],
     gate_cap: int,
-    table: DataFrame | None,
 ):
-    """Shared head of the positional serving paths: ONE pruned scan (or a
-    reader's pinned table), ONE Arrow metadata job yielding dfs + inlined
-    gate blobs, strict-AND plan filtering, and the rarest-term candidate
+    """Shared head of the positional serving paths: ONE pruned scan, the
+    metadata probe yielding dfs + inlined gate blobs (driver-side when
+    the parquet footers prove the read ≤ PROBE_BLOB_BUDGET, else one
+    Arrow job), strict-AND plan filtering, and the rarest-term candidate
     gate — (rows, df_by_term, plans, cand_by_qid)."""
     all_terms = sorted({t for _, ts in plans_all for t in ts})
-    got = None
-    if table is None:
-        rows = _pruned_rows(spark, layout_dir, meta, all_terms)
-        # cold path: metadata (dfs + gate blobs) via the driver bucket
-        # probe when the footer stats prove the read small — no Spark job
-        got = _term_meta_path_blobs(layout_dir, meta, all_terms,
-                                    min(gate_cap, INLINE_GATE_DF))
-    else:
-        rows = table.filter(F.col("term").isin(all_terms))
+    rows = _pruned_rows(spark, layout_dir, meta, all_terms)
+    gate_limit = min(gate_cap, INLINE_GATE_DF)
+    got = _term_meta_path_blobs(layout_dir, meta, all_terms, gate_limit)
     df_by_term, blobs = (got if got is not None
-                         else _term_meta(rows, min(gate_cap,
-                                                   INLINE_GATE_DF)))
+                         else _term_meta(rows, gate_limit))
     # strict AND: a query with any absent term matches nothing
     plans = [(qid, ts) for qid, ts in plans_all
              if all(t in df_by_term for t in ts)]
@@ -1908,15 +1768,13 @@ def phrase_match(
     gate_cap: int = CANDIDATE_CAP,
     allow_stale: bool = False,
     n_parts: int | None = None,
-    table: DataFrame | None = None,
 ) -> DataFrame:
     """(query_id, docid, n_occurrences): exact token-phrase containment
     with occurrence counts, served from a POSITIONAL term layout — the
     layout twin of phrase.phrase_match_batch, row-identical to it on a
     current layout (pinned). See the module-section comment for the scale
     shape (pruned buckets + rarest-term gate + candidate-bounded docid
-    shuffle). ``table``: a reader's pinned terms table replaces the disk
-    scan (warm serving; staleness was checked at open).
+    shuffle).
 
     Reference analog: token-sequence containment as a point query
     (`addresses/impl/NamesMatcherImpl.java:38-46`) over per-key side
@@ -1925,13 +1783,13 @@ def phrase_match(
 
     meta = _load_meta(layout_dir)
     _check_positional_layout(meta)
-    _check_stale(meta, allow_stale or table is not None)
+    _check_stale(meta, allow_stale)
     tokenize = get_analyzer(meta["analyzer"]).py_tokenize
     plans_all = [(int(qid), tokenize(text)) for qid, text in queries]
     if any(not ts for _, ts in plans_all):
         raise ValueError("empty phrase after analysis")
     rows, df_by_term, plans, cand_by_qid = _positional_prologue(
-        spark, layout_dir, meta, plans_all, gate_cap, table
+        spark, layout_dir, meta, plans_all, gate_cap
     )
     out_schema = "query_id int, docid long, n_occurrences long"
     if not plans:
@@ -1995,7 +1853,6 @@ def near_match_n(
     gate_cap: int = CANDIDATE_CAP,
     allow_stale: bool = False,
     n_parts: int | None = None,
-    table: DataFrame | None = None,
 ) -> DataFrame:
     """(query_id, docid, n_anchors): generalized N-term proximity served
     from a POSITIONAL term layout — the layout twin of
@@ -2003,13 +1860,12 @@ def near_match_n(
     Unordered: anchors (occurrences of the first term) with EVERY other
     term within token distance ≤ k. Ordered: anchors starting a strictly-
     increasing chain through the terms with each gap ≤ k. Same scale
-    shape as :func:`phrase_match` (roles are conjunctive either way);
-    ``table``: a reader's pinned terms table replaces the disk scan."""
+    shape as :func:`phrase_match` (roles are conjunctive either way)."""
     from ..analyzer import get_analyzer
 
     meta = _load_meta(layout_dir)
     _check_positional_layout(meta)
-    _check_stale(meta, allow_stale or table is not None)
+    _check_stale(meta, allow_stale)
     tokenize = get_analyzer(meta["analyzer"]).py_tokenize
     plans_all = []
     for qid, terms in queries:
@@ -2018,7 +1874,7 @@ def near_match_n(
             raise ValueError("NEAR/n needs at least two analyzed terms")
         plans_all.append((int(qid), analyzed))
     rows, df_by_term, plans, cand_by_qid = _positional_prologue(
-        spark, layout_dir, meta, plans_all, gate_cap, table
+        spark, layout_dir, meta, plans_all, gate_cap
     )
     out_schema = "query_id int, docid long, n_anchors long"
     if not plans:
@@ -2111,7 +1967,7 @@ def near_match(
             )
         plans_all.append((int(qid), [ta, tb]))
     rows, df_by_term, plans, cand_by_qid = _positional_prologue(
-        spark, layout_dir, meta, plans_all, gate_cap, None
+        spark, layout_dir, meta, plans_all, gate_cap
     )
     out_schema = "query_id int, docid long, n_pairs long"
     if not plans:
@@ -2194,7 +2050,7 @@ def phrase_topk(
     # ONE prologue (pruned scan + metadata/gate probe) shared by the
     # phrase verify AND the scoring pass — the verify used to re-probe
     rows, df_by_term, plans, cand_by_qid = _positional_prologue(
-        spark, layout_dir, meta, plans_all, gate_cap, None
+        spark, layout_dir, meta, plans_all, gate_cap
     )
     if not plans:
         return spark.createDataFrame(
@@ -2291,7 +2147,7 @@ def refresh_term_layout(
             .filter(F.col("kind") == "post").select("bucket")
             .distinct().collect()
         )
-    existing = spark.read.parquet(f"{layout_dir}/terms").select(
+    existing = _read_terms(spark, layout_dir).select(
         F.col("bucket").cast("int").alias("bucket"),
         F.lit("post").alias("kind"),
         "term", "postings", "doclens",

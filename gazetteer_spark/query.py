@@ -555,28 +555,9 @@ def match_layout_batch(
     if meta.get("fielded"):
         raise ValueError("fielded layout — use match_layout_fielded")
     termindex._check_stale(meta, allow_stale)
-    return _match_batch_impl(spark, meta, layout_dir, queries, fuzzy_dir,
-                             allow_stale, table=None,
-                             expansions_cache=expansions_cache)
-
-
-def _match_batch_impl(
-    spark: SparkSession,
-    meta: dict,
-    layout_dir: str,
-    queries: list[tuple[int, object]],
-    fuzzy_dir: str | None,
-    allow_stale: bool,
-    table: DataFrame | None,
-    expansions_cache: dict | None = None,
-) -> DataFrame:
-    """Shared batch mask compiler behind match_layout[_batch] and
-    TermLayoutReader.match — ``table`` switches the term-leaf source from
-    a fresh pruned scan to a reader's pinned terms table."""
     empty = spark.createDataFrame([], "query_id int, docid long")
     compiled = _compile_mask_parts(spark, meta, layout_dir, queries,
-                                   fuzzy_dir, allow_stale, table,
-                                   expansions_cache)
+                                   fuzzy_dir, allow_stale, expansions_cache)
     if compiled is None:
         return empty
     parts, pred = compiled
@@ -596,7 +577,6 @@ def _compile_mask_parts(
     queries: list[tuple[int, object]],
     fuzzy_dir: str | None,
     allow_stale: bool,
-    table: DataFrame | None,
     expansions_cache: dict | None = None,
 ):
     """(mask parts, tree predicate) for a batch of boolean queries — the
@@ -647,13 +627,8 @@ def _compile_mask_parts(
     parts = []
     if tmap_rows:
         all_terms = sorted({t for t, _ in tmap_rows})
-        if table is None:
-            tp = termindex.term_postings(spark, layout_dir, all_terms,
-                                         allow_stale=allow_stale)
-        else:
-            tp = termindex._decode_posting_rows(
-                table.filter(F.col("term").isin(all_terms))
-            )
+        tp = termindex.term_postings(spark, layout_dir, all_terms,
+                                     allow_stale=allow_stale)
         parts.append(_attach_masks(spark, tp, tmap_rows))
 
     # positional leaves: synthetic ids so one phrase_match / near call
@@ -692,11 +667,11 @@ def _compile_mask_parts(
 
     if phrase_batch:
         got = termindex.phrase_match(spark, layout_dir, phrase_batch,
-                                     allow_stale=allow_stale, table=table)
+                                     allow_stale=allow_stale)
         parts.append(_sid_part(got))
     for slop, grp in sorted(near_by_slop.items()):
         got = termindex.near_match_n(spark, layout_dir, grp, k=slop,
-                                     allow_stale=allow_stale, table=table)
+                                     allow_stale=allow_stale)
         parts.append(_sid_part(got))
 
     pred = reduce(
@@ -1153,7 +1128,7 @@ def search(
     # separately-aggregated filter + semi-join
     parts, pred = _compile_mask_parts(
         spark, meta, layout_dir, [(0, node)], fuzzy_dir, allow_stale,
-        None, exp_cache)
+        exp_cache)
     assert parts  # a scored query always has ≥1 mask leaf
     boosted = {t: w for t, w in scored.items() if w != 1.0}
     return termindex.bm25_topk(
@@ -1316,12 +1291,14 @@ def search_batch(
     fuzzy_dir: str | None = None,
     round_to: int | None = 4,
     allow_stale: bool = False,
+    expensive_df: int | None = None,
 ) -> DataFrame:
     """(query_id, rank, docid, score): N ranked front-door queries in ONE
-    job family — the batch compile of :func:`match_layout_batch` builds a
-    per-query (query_id, docid) filter, and ONE `bm25_topk` call scores
-    every query against its own filter (`filter_by` semi-joins on BOTH
-    keys). Per-query semantics identical to :func:`search`."""
+    job family — the batch compile of :func:`match_layout_batch` builds
+    per-query mask rows, and ONE `bm25_topk` call scores every query with
+    its own tree predicate fused into the scoring aggregation. Per-query
+    semantics identical to :func:`search`. ``expensive_df`` is
+    bm25_topk's candidate-gate cutoff."""
     from .index import termindex
 
     meta = termindex._load_meta(layout_dir)
@@ -1337,13 +1314,12 @@ def search_batch(
             [], "query_id int, rank int, docid long, score double")
     # FUSED tail — see search(): mask rows and contribs share one shuffle
     parts, pred = _compile_mask_parts(
-        spark, meta, layout_dir, plans, fuzzy_dir, allow_stale, None,
-        exp_cache)
+        spark, meta, layout_dir, plans, fuzzy_dir, allow_stale, exp_cache)
     assert parts  # scored queries always have ≥1 mask leaf
     return termindex.bm25_topk(
         spark, layout_dir, sorted(scored_by_qid.items()), k=k,
         round_to=round_to, allow_stale=allow_stale,
-        mask_parts=parts, mask_pred=pred,
+        expensive_df=expensive_df, mask_parts=parts, mask_pred=pred,
         qweights=weights or None,
     )
 

@@ -496,3 +496,81 @@ def test_fused_batch_search_equals_per_query(spark, served):
         one = Q.search(spark, lay, q, k=5, fuzzy_dir=fzd)
         want.extend((i, r, d, s) for (_, r, d, s) in _ranked(one))
     assert got == sorted(want)
+
+
+# ---------------------------------------------------------------------------
+# layout reader: driver-side state only, job-count pins
+# ---------------------------------------------------------------------------
+
+# one leaf kind each: term, boolean, phrase, NEAR, prefix, fuzzy
+MIXED_BATCH = [
+    (0, "customer"),
+    (1, "customer OR filter AND group"),
+    (2, '"key order" AND customer'),
+    (3, '"key order value"~3 AND customer'),
+    (4, "s* AND NOT group"),
+    (5, "grup~1 AND customer"),
+]
+
+
+def _jobs(spark, fn):
+    """(fn's result, Spark jobs it ran), counted under its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_open_reader_caches_nothing(spark, served):
+    """An open TermLayoutReader pins no Spark data: the cache manager
+    stays empty and a cold query's plan reads the pruned layout files,
+    never an in-memory relation."""
+    lay, fzd = served
+    # the test session is shared: start from an empty cache manager
+    # (other modules' fixtures leave cached frames behind)
+    spark.catalog.clearCache()
+    rd = termindex.TermLayoutReader(spark, lay)
+    try:
+        rd.search(MIXED_BATCH, k=10, fuzzy_dir=fzd).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        cold = Q.search(spark, lay, "customer AND filter", k=10)
+        assert cold.collect()
+        qe = cold._jdf.queryExecution()
+        assert "InMemoryRelation" not in qe.withCachedData().toString()
+        assert "InMemoryTableScan" not in qe.executedPlan().toString()
+    finally:
+        rd.close()
+
+
+def test_reader_search_job_counts(spark, served):
+    """A reader batch runs no more jobs than the cold batched front door
+    and returns the same rows."""
+    lay, fzd = served
+    cold, n_cold = _jobs(spark, lambda: _ranked(Q.search_batch(
+        spark, lay, MIXED_BATCH, k=10, fuzzy_dir=fzd)))
+    rd = termindex.TermLayoutReader(spark, lay)
+    try:
+        warm, n_warm = _jobs(spark, lambda: _ranked(rd.search(
+            MIXED_BATCH, k=10, fuzzy_dir=fzd)))
+    finally:
+        rd.close()
+    assert sorted(warm) == sorted(cold) and cold
+    assert {q for q, *_ in cold} == {q for q, _ in MIXED_BATCH}
+    assert n_warm <= n_cold
+
+
+def test_cold_single_term_search_jobs(spark, served):
+    """A cold single-term query.search runs at most 3 Spark jobs: every
+    parquet read declares its schema, so none pays a schema-inference
+    job."""
+    lay, _ = served
+    rows, n = _jobs(spark, lambda: Q.search(spark, lay, "customer",
+                                            k=10).collect())
+    assert rows
+    assert n <= 3

@@ -246,6 +246,50 @@ def test_term_layout_reader_warm_matches_cold(spark, documents,
         reader.close()
 
 
+def test_reader_serves_its_snapshot_across_refresh(spark, documents,
+                                                  tmp_path_factory):
+    """A TermLayoutReader checks staleness once, at open, and serves the
+    layout directory it opened: after the source index grows and
+    refresh_term_layout writes a NEW directory, the open reader's answers
+    are row-identical to its answers before the refresh, while the cold
+    path refuses the now-stale directory and a reader on the refreshed
+    directory sees the new documents."""
+    from gazetteer_spark import query as Q
+
+    idx = str(tmp_path_factory.mktemp("idx_snap"))
+    spimi.build_index(spark, documents.filter(F.col("doc_id") < 300), idx,
+                      n_shards=4, id_col="doc_id", content_col="text",
+                      positions=True, doclens=True)
+    lay0 = str(tmp_path_factory.mktemp("lay_snap0"))
+    termindex.build_term_layout(spark, idx, lay0, n_buckets=8,
+                                positions=True)
+    queries = [(0, "customer filter"), (1, "customer OR filter"),
+               (2, '"key order" OR window')]
+    rows = lambda df: sorted(  # noqa: E731
+        (r["query_id"], r["rank"], r["docid"], r["score"])
+        for r in df.collect())
+    reader = termindex.TermLayoutReader(spark, lay0)
+    try:
+        before = (rows(reader.search(queries, k=10)),
+                  rows(reader.topk(queries[:2], k=10)))
+        spimi.add_documents(spark, documents.filter(F.col("doc_id") >= 300),
+                            idx, id_col="doc_id", content_col="text")
+        lay1 = str(tmp_path_factory.mktemp("lay_snap1"))
+        termindex.refresh_term_layout(spark, idx, lay0, lay1)
+        after = (rows(reader.search(queries, k=10)),
+                 rows(reader.topk(queries[:2], k=10)))
+    finally:
+        reader.close()
+    assert after == before and all(before)
+    with pytest.raises(ValueError, match="STALE"):
+        Q.search_batch(spark, lay0, queries, k=10)
+    fresh = termindex.TermLayoutReader(spark, lay1)
+    try:
+        assert rows(fresh.search(queries, k=10)) != before[0]
+    finally:
+        fresh.close()
+
+
 def test_bm25_gate_random_trials(spark, tmp_path_factory):
     """Seeded-random corpora + thresholds: the gated scorer equals the
     ungated one on every trial (rare/medium/stopword term mix, random
@@ -720,6 +764,18 @@ def test_fielded_layout_reader_warm_matches_cold(spark, fielded_v3):
             want = _rows_of(termindex.bm25f_topk(spark, flay, queries,
                                                  boosts=FL_BOOSTS, k=10))
             assert got == want and got
+    finally:
+        reader.close()
+
+
+def test_fielded_layout_reader_caches_nothing(spark, fielded_v3):
+    """An open FieldedLayoutReader pins no Spark data."""
+    _, flay = fielded_v3
+    spark.catalog.clearCache()  # shared session: start empty
+    reader = termindex.FieldedLayoutReader(spark, flay)
+    try:
+        assert _rows_of(reader.topk(FL_QUERIES, boosts=FL_BOOSTS, k=10))
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     finally:
         reader.close()
 
