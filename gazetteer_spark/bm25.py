@@ -27,6 +27,7 @@ from pyspark.sql import Window as W
 
 from . import B, K1
 from .analyzer import py_tokenize
+from .session import local_frame
 
 
 def doc_stats(postings: DataFrame) -> DataFrame:
@@ -126,17 +127,7 @@ def score_queries(
 
     qw_rows = [(qid, t, df_by_term[t]) for qid, t in qterms
                if t in df_by_term]  # drops OOV terms
-    if not qw_rows:
-        from pyspark.sql import types as T
-
-        qw_rows_schema = T.StructType([
-            T.StructField("query_id", T.IntegerType()),
-            T.StructField("term", T.StringType()),
-            T.StructField("df", T.LongType()),
-        ])
-        qwdf = spark.createDataFrame([], qw_rows_schema)
-    else:
-        qwdf = spark.createDataFrame(qw_rows, "query_id int, term string, df long")
+    qwdf = local_frame(spark, qw_rows, "query_id int, term string, df long")
     # idf as a JVM expression over literal stats — constant-folded per row,
     # bit-identical to the former broadcast-computed idf column
     qweights = qwdf.select(

@@ -55,6 +55,7 @@ from .index import spimi
 from .index.codec import DelIndex, decode_postings
 from .index.spimi import FIELD_SEP
 from .index.wand import _idf
+from .session import local_frame
 
 DEFAULT_BOOST = 1.0
 
@@ -113,7 +114,7 @@ def bm25f_topk(
     qrows = [
         (qid, t) for qid, text in queries for t in sorted(set(tokenize(text)))
     ]
-    qdf = spark.createDataFrame(qrows, "query_id int, term string")
+    qdf = local_frame(spark, qrows, "query_id int, term string")
 
     fp = fielded_postings(docs, id_col, fields, analyzer)
     flen = fp.groupBy("docid", "field").agg(F.sum("tf").alias("flen"))
@@ -644,8 +645,8 @@ def _fielded_topk_impl(
     ]
     qplans = [(qid, ts) for qid, ts in qplans if ts]
     if not qplans:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, docid long, score double"
+        return local_frame(
+            spark, [], "query_id int, rank int, docid long, score double"
         )
     local = _relevant_fielded(seg, fields, all_terms).groupBy("shard").applyInPandas(
         lambda p: _score_shard_fielded(
@@ -927,7 +928,7 @@ def fielded_phrase_topk(
     avglen = {f: stats["field_totals"].get(f, 0) / n_docs for f in fields}
     dfs = _df_job(seg, fields, base)
     if any(t not in dfs for t in base):  # conjunctive: absent term → empty
-        return spark.createDataFrame([], "rank int, docid long, score double")
+        return local_frame(spark, [], "rank int, docid long, score double")
     qweights = {t: _idf(n_docs, dfs[t]) for t in base}
     boosts = boosts or {}
     local = _relevant_fielded(seg, fields, base).groupBy("shard").applyInPandas(

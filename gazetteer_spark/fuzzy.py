@@ -51,6 +51,7 @@ from .analyzer import (
 from .index import spimi
 from .index.codec import DelIndex, decode_postings
 from .index.phrase import _intersect_candidates, _term_handles
+from .session import local_frame
 
 NGRAM_N = 3
 
@@ -131,7 +132,9 @@ def build_fuzzy_layout(
         id_col="term_id", content_col="term", analyzer="ngram3",
     )
     meta = {
-        "source_index": os.path.abspath(index_dir),
+        # relative to the layout dir: the bytes of a layout must not
+        # depend on where the index lives (and the two move together)
+        "source_index": os.path.relpath(index_dir, out_dir),
         "base_analyzer": params.get("analyzer", "default"),
         "base_analyzer_version": params["analyzer_version"],
         "gram_analyzer_version": NGRAM_ANALYZER.version,
@@ -393,8 +396,8 @@ def fuzzy_terms_edit_batch(
         else:
             specs.append((int(wid), grams, min_shared))
     terms_tbl = _dict_table(spark, fuzzy_dir)
-    wdf = spark.createDataFrame(
-        [(i, w, e) for i, (w, e) in sorted(norm.items())],
+    wdf = local_frame(
+        spark, [(i, w, e) for i, (w, e) in sorted(norm.items())],
         "word_id int, word string, max_edits int",
     )
     verify = F.levenshtein(F.col("term"), F.col("word")) <= F.col("max_edits")
@@ -416,8 +419,8 @@ def fuzzy_terms_edit_batch(
             .filter(verify).select("word_id", "term")
         )
     if fallback:
-        fb = spark.createDataFrame(
-            fallback, "word_id int, word string, max_edits int"
+        fb = local_frame(
+            spark, fallback, "word_id int, word string, max_edits int"
         )
         parts.append(
             terms_tbl.crossJoin(F.broadcast(fb))
@@ -502,7 +505,7 @@ def prefix_terms(
             f"prefix {p!r} matches > {max_terms} vocabulary terms; "
             "use a longer prefix"
         )
-    return spark.createDataFrame(out, "term string, df long")
+    return local_frame(spark, out, "term string, df long")
 
 
 def prefix_terms_batch(
@@ -638,7 +641,7 @@ def fuzzy_docs(
             f"(> {MAX_FUZZY_TERMS}); refine the fragment"
         )
     if not matched:
-        return spark.createDataFrame([], "docid long")
+        return local_frame(spark, [], "docid long")
     if meta.get("fields"):
         # fielded primary index: postings are composite field\x1fterm —
         # a matched base term fans in from EVERY field's composite row

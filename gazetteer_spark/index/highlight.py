@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..analyzer import get_analyzer
+from ..session import local_frame
 from . import termindex
 
 OUT_SCHEMA = ("query_id int, rank int, docid long, score double, "
@@ -94,7 +95,7 @@ def highlight_topk(
                                round_to=round_to,
                                allow_stale=allow_stale).collect()
     if not hits:
-        return spark.createDataFrame([], OUT_SCHEMA)
+        return local_frame(spark, [], OUT_SCHEMA)
     cand_by_qid: dict[int, np.ndarray] = {}
     for r in hits:
         cand_by_qid.setdefault(r["query_id"], []).append(r["docid"])
@@ -115,7 +116,8 @@ def highlight_topk(
     wins = occ.groupBy("query_id", "part").applyInPandas(
         lambda pdf: _best_windows(pdf, window),
         "query_id int, docid long, win_start int, n_terms int")
-    hit_df = spark.createDataFrame(
+    hit_df = local_frame(
+        spark,
         [(r["query_id"], r["rank"], r["docid"], r["score"]) for r in hits],
         "query_id int, rank int, docid long, score double")
     return (wins.join(F.broadcast(hit_df), ["query_id", "docid"])
@@ -150,9 +152,9 @@ def snippet_text(
                           round_to=round_to, allow_stale=allow_stale)
     rows = hits.collect()
     if not rows:
-        return spark.createDataFrame([], OUT_SCHEMA + ", snippet string")
+        return local_frame(spark, [], OUT_SCHEMA + ", snippet string")
     ids = sorted({r["docid"] for r in rows})
-    hit_df = spark.createDataFrame(rows, OUT_SCHEMA)
+    hit_df = local_frame(spark, rows, OUT_SCHEMA)
     toks = an.tokens_expr(F.col(content_col))
     return (
         docs.filter(F.col(id_col).isin(ids))

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..analyzer import get_analyzer
+from ..session import local_frame
 from .codec import (
     MAXPOS,  # noqa: F401 — packed-key base; guarded at encode time in codec
     DelIndex,
@@ -499,8 +500,8 @@ def phrase_topk_batch(
     live = [(qid, ts) for qid, ts in plans
             if all(t in df_by_term for t in ts)]
     if not live:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, docid long, score double")
+        return local_frame(
+            spark, [], "query_id int, rank int, docid long, score double")
     relevant = seg.filter(
         ((F.col("kind") == "post") & F.col("term").isin(all_terms))
         | (F.col("kind") == "docs")
@@ -564,7 +565,7 @@ def phrase_topk(
     termstats = load_termstats(spark, index_dir)
     df_by_term = _lookup_dfs(termstats, sorted(set(terms)))
     if any(t not in df_by_term for t in terms):
-        return spark.createDataFrame([], "rank int, docid long, score double")
+        return local_frame(spark, [], "rank int, docid long, score double")
     qweights = {t: _idf(stats["n_docs"], df_by_term[t]) for t in set(terms)}
     relevant = seg.filter(
         ((F.col("kind") == "post") & F.col("term").isin(sorted(set(terms))))

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import B, K1
+from ..session import local_frame
 from .codec import (
     encode_blocks_grouped,
     encode_positions_grouped,
@@ -602,7 +603,7 @@ def delete_documents(
 ) -> dict:
     """Tombstone delete from a driver-side id list — convenience wrapper
     over :func:`delete_documents_df` for metadata-scale deletes."""
-    df = spark.createDataFrame([(int(d),) for d in docids], "docid long")
+    df = local_frame(spark, [(int(d),) for d in docids], "docid long")
     return delete_documents_df(spark, df, out_dir, manifest_extra=manifest_extra)
 
 
@@ -855,10 +856,15 @@ def _termstats_driver(out_dir: str, pairs: dict[int, list[int]]) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     pq.write_table(out, f"{tmp}/part-00000.parquet", row_group_size=32768)
-    dst = f"{out_dir}/termstats"
+    # the old table moves aside before the new one renames into place and
+    # is removed only after: a refresh that dies between the two renames
+    # leaves the aside copy, which termstats_dir serves
+    dst, old = f"{out_dir}/termstats", f"{out_dir}/{TERMSTATS_ASIDE}"
     if os.path.isdir(dst):
-        shutil.rmtree(dst)
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(dst, old)
     os.rename(tmp, dst)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def _refresh_derived(spark: SparkSession, out_dir: str, params: dict) -> None:
@@ -1063,10 +1069,23 @@ def _commit_manifest(
 TERMSTATS_SCHEMA = "term string, df long, cf long"
 
 
+# where _termstats_driver keeps the previous table while it swaps in a new one
+TERMSTATS_ASIDE = ".termstats.old"
+
+
+def termstats_dir(out_dir: str) -> str:
+    """The termstats directory to read: ``termstats``, or the previous
+    table's aside copy when a driver-side refresh died between moving the
+    old table aside and renaming the new one into place."""
+    dst = f"{out_dir}/termstats"
+    old = f"{out_dir}/{TERMSTATS_ASIDE}"
+    return old if not os.path.isdir(dst) and os.path.isdir(old) else dst
+
+
 def load_termstats(spark: SparkSession, out_dir: str) -> DataFrame:
     """The global (term, df, cf) table, read with its fixed schema (no
     schema-inference job)."""
-    return spark.read.schema(TERMSTATS_SCHEMA).parquet(f"{out_dir}/termstats")
+    return spark.read.schema(TERMSTATS_SCHEMA).parquet(termstats_dir(out_dir))
 
 
 def load_stats(out_dir: str) -> dict:

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from .. import B, K1
+from ..session import local_frame
 from .codec import (
     MAXPOS,
     DelIndex,
@@ -425,7 +426,11 @@ def build_term_layout(
         merged.write.mode("overwrite").partitionBy("bucket").parquet(
             f"{out_dir}/terms"
         )
-    meta = {"n_buckets": n_buckets, "source_index": os.path.abspath(index_dir),
+    # source_index is stored relative to the layout dir, so an index and
+    # its layout move together and the layout's bytes do not depend on
+    # where they live; _load_meta resolves it
+    meta = {"n_buckets": n_buckets,
+            "source_index": os.path.relpath(index_dir, out_dir),
             "analyzer": params.get("analyzer", "default"),
             "analyzer_version": params["analyzer_version"],
             "has_doclens": with_doclens,
@@ -455,10 +460,13 @@ def build_term_layout(
 def _load_meta(layout_dir: str) -> dict:
     """layout.json is the COMMIT POINT (written atomically after the terms
     table lands): its absence means no layout or a build that died before
-    committing — either way the partial data is invisible by design."""
+    committing — either way the partial data is invisible by design.
+    ``source_index`` comes back as an absolute path: it is stored
+    relative to the layout dir (a layout written before that stored it
+    absolute, which joins to itself)."""
     try:
         with open(f"{layout_dir}/layout.json") as f:
-            return json.load(f)
+            meta = json.load(f)
     except FileNotFoundError:
         raise ValueError(
             f"{layout_dir} has no layout.json — not a committed term "
@@ -466,6 +474,9 @@ def _load_meta(layout_dir: str) -> dict:
             "a killed build leaves no visible layout). Rebuild with "
             "build_term_layout."
         ) from None
+    meta["source_index"] = os.path.normpath(os.path.join(
+        os.path.abspath(layout_dir), meta["source_index"]))
+    return meta
 
 
 def _check_stale(meta: dict, allow_stale: bool) -> None:
@@ -517,16 +528,49 @@ def _read_terms(spark: SparkSession, layout_dir: str) -> DataFrame:
     return spark.read.schema(TERM_LAYOUT_SCHEMA).parquet(f"{layout_dir}/terms")
 
 
+def _bucket_files(layout_dir: str, meta: dict,
+                  terms: list[str]) -> list[tuple[str, int]]:
+    """(path, bytes) of the parquet files in the hash buckets of
+    ``terms`` — the one driver-side listing a layout read makes: the
+    driver probes read these files and _pruned_rows sizes its scan by
+    their bytes."""
+    files: list[tuple[str, int]] = []
+    for b in _buckets_for(None, terms, meta["n_buckets"]):
+        d = f"{layout_dir}/terms/bucket={b}"
+        if not os.path.isdir(d):
+            continue
+        for e in sorted(os.scandir(d), key=lambda e: e.name):
+            if e.name.endswith(".parquet"):
+                files.append((e.path, e.stat().st_size))
+    return files
+
+
 def _pruned_rows(
-    spark: SparkSession, layout_dir: str, meta: dict, terms: list[str]
+    spark: SparkSession, layout_dir: str, meta: dict, terms: list[str],
+    files: list[tuple[str, int]] | None = None,
 ) -> DataFrame:
     """Layout rows of ``terms``: bucket partition pruning plus parquet
     min/max pruning on term. Composite ``field\\x1fterm`` inputs prune by
-    their base term's bucket (see _buckets_for)."""
+    their base term's bucket (see _buckets_for).
+
+    The scan runs in max(1, ceil(Σ touched file bytes /
+    spark.sql.files.maxPartitionBytes)) partitions (a coalesce, so never
+    more than the file splits). The session's split rule (openCost =
+    maxPartitionBytes, sized for the analyzer's CPU-bound input) would
+    give every small bucket file its own task, and every mapInPandas over
+    these rows would then start one Python task, ~0.2 CPU s fixed, per
+    file; sized by bytes, tiny buckets share one task while a large
+    bucket keeps its row-group splits. ``files``: the caller's
+    _bucket_files listing of the same terms, when it already made one."""
+    if files is None:
+        files = _bucket_files(layout_dir, meta, terms)
     buckets = _buckets_for(spark, terms, meta["n_buckets"])
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n_parts = max(1, -(-sum(size for _, size in files) // split))
     return (
         _read_terms(spark, layout_dir)
         .filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+        .coalesce(n_parts)
     )
 
 
@@ -806,11 +850,12 @@ def bm25_topk(
     all_terms = sorted({t for ts in qterms.values() for t in ts})
     if not all_terms:
         raise ValueError("no query terms")
-    rows = _pruned_rows(spark, layout_dir, meta, all_terms)
+    files = _bucket_files(layout_dir, meta, all_terms)
+    rows = _pruned_rows(spark, layout_dir, meta, all_terms, files)
 
     # df per query term: a driver-side pyarrow probe of the same committed
     # bucket files — no metadata Spark job (see _term_meta_path)
-    df_by_term = _term_meta_path(layout_dir, meta, all_terms)
+    df_by_term = _term_meta_path(layout_dir, meta, all_terms, files)
     _check_qweights(qweights)
 
     assert not (mask_parts and filter_by is not None)
@@ -834,8 +879,8 @@ def bm25_topk(
         if present:
             plans.append((int(qid), present))
     if not plans:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, docid long, score double"
+        return local_frame(
+            spark, [], "query_id int, rank int, docid long, score double"
         )
     margin = (2.0 * 10.0 ** (-round_to) if round_to is not None
               else 0.0) + _EPS
@@ -1130,9 +1175,10 @@ def bm25f_topk(
         raise ValueError("no query terms")
     boosts = dict(boosts or {})
     comp = [f + FIELD_SEP + t for f in meta["fields"] for t in all_terms]
-    rows = _pruned_rows(spark, layout_dir, meta, comp)
+    files = _bucket_files(layout_dir, meta, comp)
+    rows = _pruned_rows(spark, layout_dir, meta, comp, files)
     # per-composite df via the driver-side bucket probe — no metadata job
-    comp_df = _term_meta_path(layout_dir, meta, comp)
+    comp_df = _term_meta_path(layout_dir, meta, comp, files)
 
     assert not (mask_parts and filter_by is not None)
     # kwargs passed only when fusing (see bm25_topk — spy-compat)
@@ -1160,8 +1206,8 @@ def bm25f_topk(
         if present:
             plans.append((int(qid), present))
     if not plans:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, docid long, score double"
+        return local_frame(
+            spark, [], "query_id int, rank int, docid long, score double"
         )
     margin = (2.0 * 10.0 ** (-round_to) if round_to is not None
               else 0.0) + _EPS
@@ -1366,12 +1412,13 @@ def bm25_and_topk(
     all_terms = sorted({t for ts in qterms.values() for t in ts})
     if not all_terms:
         raise ValueError("no query terms")
-    rows = _pruned_rows(spark, layout_dir, meta, all_terms)
+    files = _bucket_files(layout_dir, meta, all_terms)
+    rows = _pruned_rows(spark, layout_dir, meta, all_terms, files)
     # dfs + inlined gating blobs: driver bucket probe when the footer
     # stats prove the read small, else ONE Arrow metadata job (was a Row
     # collect plus a second decoded-postings collect per batch)
     got = _term_meta_path_blobs(layout_dir, meta, all_terms,
-                                min(gate_cap, INLINE_GATE_DF))
+                                min(gate_cap, INLINE_GATE_DF), files)
     df_by_term, blobs = (got if got is not None
                          else _term_meta(rows, min(gate_cap,
                                                    INLINE_GATE_DF)))
@@ -1382,8 +1429,8 @@ def bm25_and_topk(
         if ts and all(t in df_by_term for t in ts):
             plans.append((qid, ts))
     if not plans:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, docid long, score double"
+        return local_frame(
+            spark, [], "query_id int, rank int, docid long, score double"
         )
 
     # rarest-term gate (exact under AND); blobs cover the common case,
@@ -1486,8 +1533,9 @@ def _check_positional_layout(meta: dict) -> None:
 INLINE_GATE_DF = 131072
 
 
-def _term_meta_path(layout_dir: str, meta: dict,
-                    terms: list[str]) -> dict[str, int]:
+def _term_meta_path(layout_dir: str, meta: dict, terms: list[str],
+                    files: list[tuple[str, int]] | None = None,
+                    ) -> dict[str, int]:
     """{term: df} straight from the layout's bucket parquet files — a
     DRIVER-side pyarrow probe, no Spark job (the cold-wand dictionary-
     probe pattern applied to the layout). Buckets come from the xxhash64
@@ -1498,20 +1546,16 @@ def _term_meta_path(layout_dir: str, meta: dict,
     metadata need of bm25_topk / bm25f_topk; gate-blob probes (phrase /
     AND prologues) keep the Arrow job, whose inlined postings a driver
     read could not bound. Reads the same committed files the pruned scan
-    reads (layout.json is the commit point), so values are identical."""
+    reads (layout.json is the commit point), so values are identical.
+    ``files``: the caller's _bucket_files listing, when it made one."""
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
-    buckets = _buckets_for(None, terms, meta["n_buckets"])
-    files: list[str] = []
-    for b in buckets:
-        d = f"{layout_dir}/terms/bucket={b}"
-        if os.path.isdir(d):
-            files.extend(f"{d}/{n}" for n in sorted(os.listdir(d))
-                         if n.endswith(".parquet"))
+    if files is None:
+        files = _bucket_files(layout_dir, meta, terms)
     if not files:
         return {}
-    t = pads.dataset(files, format="parquet").to_table(
+    t = pads.dataset([p for p, _ in files], format="parquet").to_table(
         columns=["term", "df"], filter=pc.field("term").isin(terms)
     )
     return {s: int(d) for s, d in zip(t["term"].to_pylist(),
@@ -1528,6 +1572,7 @@ PROBE_BLOB_BUDGET = int(
 
 def _term_meta_path_blobs(
     layout_dir: str, meta: dict, terms: list[str], gate_limit: int,
+    files: list[tuple[str, int]] | None = None,
 ) -> tuple[dict[str, int], dict[str, bytes]] | None:
     """Driver-side twin of ``_term_meta(rows, gate_limit)``: ({term: df},
     {term: posting blob} for df ≤ gate_limit) probed straight from the
@@ -1537,44 +1582,40 @@ def _term_meta_path_blobs(
     probe returns None — caller falls back to the Arrow job — as soon as
     the selected postings column chunks exceed PROBE_BLOB_BUDGET
     (compressed bytes, from footer metadata, before any data is read).
-    Missing/truncated stats count a row group as matching
-    (conservative)."""
+    Stats compare as raw UTF-8 bytes — parquet's string order — so a
+    truncated or otherwise invalid-UTF-8 bound still prunes soundly
+    instead of failing to decode; missing stats count a row group as
+    matching (conservative). ``files``: the caller's _bucket_files
+    listing, when it made one."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     tset = sorted(set(terms))
     tarr = pa.array(tset)
+    tbytes = [t.encode("utf-8", "surrogatepass") for t in tset]
+    if files is None:
+        files = _bucket_files(layout_dir, meta, terms)
     picked: list[tuple] = []  # (ParquetFile, [row-group idx])
     total = 0
-    for b in _buckets_for(None, terms, meta["n_buckets"]):
-        d = f"{layout_dir}/terms/bucket={b}"
-        if not os.path.isdir(d):
-            continue
-        for name in sorted(os.listdir(d)):
-            if not name.endswith(".parquet"):
-                continue
-            pf = pq.ParquetFile(f"{d}/{name}")
-            names = pf.schema_arrow.names
-            ti, pi = names.index("term"), names.index("postings")
-            md = pf.metadata
-            sel = []
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(ti).statistics
-                if st is not None and st.has_min_max:
-                    mn, mx = st.min, st.max
-                    if isinstance(mn, bytes):
-                        mn = mn.decode("utf-8", "surrogatepass")
-                    if isinstance(mx, bytes):
-                        mx = mx.decode("utf-8", "surrogatepass")
-                    if not any(mn <= t <= mx for t in tset):
-                        continue
-                sel.append(i)
-                total += md.row_group(i).column(pi).total_compressed_size
-                if total > PROBE_BLOB_BUDGET:
-                    return None
-            if sel:
-                picked.append((pf, sel))
+    for path, _ in files:
+        pf = pq.ParquetFile(path)
+        names = pf.schema_arrow.names
+        ti, pi = names.index("term"), names.index("postings")
+        md = pf.metadata
+        sel = []
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(ti).statistics
+            if st is not None and st.has_min_max:
+                mn, mx = st.min_raw, st.max_raw
+                if not any(mn <= t <= mx for t in tbytes):
+                    continue
+            sel.append(i)
+            total += md.row_group(i).column(pi).total_compressed_size
+            if total > PROBE_BLOB_BUDGET:
+                return None
+        if sel:
+            picked.append((pf, sel))
     dfs: dict[str, int] = {}
     blobs: dict[str, bytes] = {}
     for pf, sel in picked:
@@ -1748,9 +1789,11 @@ def _positional_prologue(
     Arrow job), strict-AND plan filtering, and the rarest-term candidate
     gate — (rows, df_by_term, plans, cand_by_qid)."""
     all_terms = sorted({t for _, ts in plans_all for t in ts})
-    rows = _pruned_rows(spark, layout_dir, meta, all_terms)
+    files = _bucket_files(layout_dir, meta, all_terms)
+    rows = _pruned_rows(spark, layout_dir, meta, all_terms, files)
     gate_limit = min(gate_cap, INLINE_GATE_DF)
-    got = _term_meta_path_blobs(layout_dir, meta, all_terms, gate_limit)
+    got = _term_meta_path_blobs(layout_dir, meta, all_terms, gate_limit,
+                                files)
     df_by_term, blobs = (got if got is not None
                          else _term_meta(rows, gate_limit))
     # strict AND: a query with any absent term matches nothing
@@ -1793,7 +1836,7 @@ def phrase_match(
     )
     out_schema = "query_id int, docid long, n_occurrences long"
     if not plans:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     return _phrase_match_core(spark, rows, plans, cand_by_qid, n_parts)
 
 
@@ -1878,7 +1921,7 @@ def near_match_n(
     )
     out_schema = "query_id int, docid long, n_anchors long"
     if not plans:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     subs_by_term: dict[str, list[tuple[int, int]]] = {}
     for qid, ts in plans:
         for role, t in enumerate(ts):
@@ -1971,7 +2014,7 @@ def near_match(
     )
     out_schema = "query_id int, docid long, n_pairs long"
     if not plans:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     subs_by_term: dict[str, list[tuple[int, int]]] = {}
     for qid, ts in plans:
         for role, t in enumerate(ts):
@@ -2053,8 +2096,8 @@ def phrase_topk(
         spark, layout_dir, meta, plans_all, gate_cap
     )
     if not plans:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, docid long, score double"
+        return local_frame(
+            spark, [], "query_id int, rank int, docid long, score double"
         )
     matched = _phrase_match_core(spark, rows, plans, cand_by_qid, n_parts)
     idf_by_term = {t: _idf(n_docs, d) for t, d in df_by_term.items()}
@@ -2180,6 +2223,7 @@ def refresh_term_layout(
                 if os.path.isdir(src) and not os.path.exists(dst):
                     shutil.copytree(src, dst)
     new_meta = dict(meta)
+    new_meta["source_index"] = os.path.relpath(index_dir, out_dir)
     new_meta["source_generations"] = sorted(current)
     new_meta["max_source_gen"] = max(current, default=0)
     if with_doclens:

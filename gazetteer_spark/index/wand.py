@@ -44,6 +44,7 @@ from pyspark.sql import Window as W
 
 from .. import B, K1
 from ..analyzer import get_analyzer
+from ..session import local_frame
 from .codec import (
     DelIndex,
     decode_block_meta,
@@ -51,7 +52,7 @@ from .codec import (
     decode_postings,
     decode_postings_grouped,
 )
-from .spimi import load_stats
+from .spimi import load_stats, load_termstats, termstats_dir
 
 EPS = 1e-9
 
@@ -266,7 +267,7 @@ def _lookup_dfs_path(index_dir: str, terms: list[str]) -> dict[str, int]:
     DataFrame probe instead."""
     import pyarrow.dataset as pads
 
-    data = pads.dataset(f"{index_dir}/termstats", format="parquet")
+    data = pads.dataset(termstats_dir(index_dir), format="parquet")
     t = data.to_table(
         columns=["term", "df"],
         filter=pads.field("term").isin(sorted(terms)),
@@ -304,7 +305,7 @@ def _topk_impl(
     ]
     qplans = [(qid, ts) for qid, ts in qplans if ts]
     if not qplans:
-        return spark.createDataFrame([], "query_id int, rank int, docid long, score double")
+        return local_frame(spark, [], "query_id int, rank int, docid long, score double")
 
     relevant = seg.filter(
         ((F.col("kind") == "post") & F.col("term").isin(all_terms))
@@ -462,8 +463,8 @@ def topk_and(
         )
         qplans.append((qid, weighted, len(ts)))
     if not qplans:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, docid long, score double"
+        return local_frame(
+            spark, [], "query_id int, rank int, docid long, score double"
         )
     relevant = seg.filter(
         ((F.col("kind") == "post") & F.col("term").isin(all_terms))
@@ -502,7 +503,7 @@ class IndexReader:
         self.index_dir = index_dir
         self.stats = load_stats(index_dir)
         self.seg = committed_segments(spark, index_dir).persist()
-        self.termstats = spark.read.parquet(f"{index_dir}/termstats").persist()
+        self.termstats = load_termstats(spark, index_dir).persist()
         self.termstats.count()  # materialize both caches
         self.seg.count()
         self._df_cache: dict[str, int | None] = {}  # None = known-absent

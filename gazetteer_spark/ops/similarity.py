@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..session import local_frame
+
 LSH_SEED = 42
 N_PLANES = 8
 
@@ -453,7 +455,7 @@ def ivf_topk_exact(
         probe_stats["n_lists"] = n_lists
     out = [(i + 1, int(r["vec_id"]), float(r["sim"]))
            for i, r in enumerate(rows[:k])]
-    return spark.createDataFrame(out, "rank int, vec_id long, sim double")
+    return local_frame(spark, out, "rank int, vec_id long, sim double")
 
 
 def build_lsh_layout(
@@ -585,9 +587,9 @@ def lsh_topk_layout_batch(
         excl = exclude_ids.get(qid)
         qrows.append((int(qid), [float(x) for x in vec],
                       None if excl is None else int(excl)))
-    probes_df = spark.createDataFrame(probe_rows, "query_id int, bucket int")
-    qdf = spark.createDataFrame(
-        qrows, "query_id int, qvec array<double>, excl long"
+    probes_df = local_frame(spark, probe_rows, "query_id int, bucket int")
+    qdf = local_frame(
+        spark, qrows, "query_id int, qvec array<double>, excl long"
     )
     scored = (
         spark.read.parquet(f"{layout_dir}/vectors")
@@ -633,9 +635,9 @@ def ivf_topk_layout_batch(
         excl = exclude_ids.get(qid)
         qrows.append((int(qid), [float(x) for x in vec],
                       None if excl is None else int(excl)))
-    probes_df = spark.createDataFrame(probe_rows, "query_id int, list_id int")
-    qdf = spark.createDataFrame(
-        qrows, "query_id int, qvec array<double>, excl long"
+    probes_df = local_frame(spark, probe_rows, "query_id int, list_id int")
+    qdf = local_frame(
+        spark, qrows, "query_id int, qvec array<double>, excl long"
     )
     scored = (
         spark.read.parquet(f"{layout_dir}/vectors")

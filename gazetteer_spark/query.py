@@ -68,6 +68,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .analyzer import get_analyzer, shingles_expr
+from .session import local_frame
 
 # mask bits ride a signed long; bit 63 would flip the sign under bit_or
 MAX_LEAVES = 62
@@ -555,7 +556,7 @@ def match_layout_batch(
     if meta.get("fielded"):
         raise ValueError("fielded layout — use match_layout_fielded")
     termindex._check_stale(meta, allow_stale)
-    empty = spark.createDataFrame([], "query_id int, docid long")
+    empty = local_frame(spark, [], "query_id int, docid long")
     compiled = _compile_mask_parts(spark, meta, layout_dir, queries,
                                    fuzzy_dir, allow_stale, expansions_cache)
     if compiled is None:
@@ -711,8 +712,8 @@ def _attach_masks(spark: SparkSession, tp: DataFrame,
             tp.select("docid", F.explode(qm_map[F.col("term")]).alias("qm"))
             .select("qm.query_id", "docid", "qm.mask")
         )
-    tmap = spark.createDataFrame(
-        sorted((t, q, m) for (t, q), m in tmap_rows.items()),
+    tmap = local_frame(
+        spark, sorted((t, q, m) for (t, q), m in tmap_rows.items()),
         "term string, query_id int, mask long",
     )
     return (tp.join(F.broadcast(tmap), "term")
@@ -794,7 +795,7 @@ def match_layout_fielded_batch(
     if not meta.get("fielded"):
         raise ValueError("not a fielded layout — use match_layout")
     termindex._check_stale(meta, allow_stale)
-    empty = spark.createDataFrame([], "query_id int, docid long")
+    empty = local_frame(spark, [], "query_id int, docid long")
     compiled = _compile_fielded_mask_parts(
         spark, meta, layout_dir, queries, fuzzy_dir, allow_stale,
         expansions_cache)
@@ -1010,7 +1011,7 @@ def match_scan(
                       an.py_tokenize)
     spark = docs.sparkSession
     if node is _FALSE:
-        return spark.createDataFrame([], "docid long")
+        return local_frame(spark, [], "docid long")
     bits = _check_tree(node)
     _require_unscoped(bits)
     toks = an.tokens_expr(F.col(content_col))
@@ -1039,7 +1040,7 @@ def match_scan_fielded(
                       an.py_tokenize)
     spark = docs.sparkSession
     if node is _FALSE:
-        return spark.createDataFrame([], "docid long")
+        return local_frame(spark, [], "docid long")
     bits = _check_tree(node)
     for lf in bits:
         f = getattr(lf, "field", None)
@@ -1110,7 +1111,7 @@ def search(
     node = _normalize(parse(query), tokenize)
     out_schema = "query_id int, rank int, docid long, score double"
     if node is _FALSE:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     bits = _check_tree(node)
     _require_unscoped(bits)
     exp_cache: dict = {}  # expansion runs once; the filter compile reuses it
@@ -1310,8 +1311,8 @@ def search_batch(
         spark, meta, fuzzy_dir, queries, tokenize,
         expansions_cache=exp_cache)
     if not plans:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, docid long, score double")
+        return local_frame(
+            spark, [], "query_id int, rank int, docid long, score double")
     # FUSED tail — see search(): mask rows and contribs share one shuffle
     parts, pred = _compile_mask_parts(
         spark, meta, layout_dir, plans, fuzzy_dir, allow_stale, exp_cache)
@@ -1352,7 +1353,7 @@ def search_fielded(
     node = _normalize(parse(query), tokenize)
     out_schema = "query_id int, rank int, docid long, score double"
     if node is _FALSE:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     bits = _check_tree(node)
     if any(getattr(lf, "boost", 1.0) != 1.0 for lf in bits):
         raise ValueError(
@@ -1413,8 +1414,8 @@ def search_fielded_batch(
             "BM25F's per-FIELD boosts rank; scope the leaf instead"
         )
     if not plans:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, docid long, score double")
+        return local_frame(
+            spark, [], "query_id int, rank int, docid long, score double")
     # FUSED tail — see search(): mask rows and contribs share one shuffle
     parts, pred = _compile_fielded_mask_parts(
         spark, meta, layout_dir, plans, fuzzy_dir, allow_stale, exp_cache)

@@ -9,8 +9,10 @@ so DuckDB oracle comparisons are stable.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 
 def get_spark(
@@ -82,6 +84,45 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable, ddl: str) -> DataFrame:
+    """A driver-built literal table as a DataFrame that starts no Python
+    task.
+
+    ``spark.createDataFrame(<list>, ddl)`` parallelizes the list as a
+    Python RDD: one Python worker task per default partition, empty list
+    or not, and each Python task costs a fixed ~0.2 CPU s before it does
+    any work. A ``pyarrow.Table`` instead lands in the JVM as a local
+    relation (below Spark's ``arrowLocalRelationThreshold``): collecting
+    it runs no job, and an empty one folds away. Every literal table of
+    the engine goes through here (a test guards it).
+
+    ``rows`` are tuples (or Rows) in the order of the ``ddl`` schema.
+    Columns are typed by the schema, so an empty frame keeps its types,
+    and a value that does not fit its column type (an int32 overflow, a
+    fractional long) raises, as the Python path's schema verification
+    does."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    width = len(arrow)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(
+                f"row {tuple(r)!r} has {len(r)} values; schema has {width}"
+            )
+    cols = list(zip(*rows)) if rows else [()] * width
+    # convert with the inferred type, then cast (safe): converting straight
+    # to the target type would truncate a fractional value into an int
+    table = pa.Table.from_arrays(
+        [pa.array(c).cast(f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def stop_spark() -> None:

@@ -436,3 +436,56 @@ def test_termstats_driver_fold_equals_spark(spark, documents,
     monkeypatch.setattr(spimi, "DRIVER_TERMSTATS_MAX_ROWS", -1)
     spimi._refresh_derived(spark, d, params)
     assert read_ts() == drv2
+
+
+def test_termstats_swap_survives_failure_between_renames(
+        spark, documents, tmp_path_factory, monkeypatch):
+    """The driver-side termstats refresh moves the old table aside before
+    renaming the new one into place: a refresh that dies between the two
+    renames leaves the old table readable through load_termstats (and
+    the dictionary probe), and the next refresh swaps in a fresh table
+    and drops the aside copy."""
+    import json
+    import os
+
+    d = str(tmp_path_factory.mktemp("tsswap"))
+    spimi.build_index(spark, documents.filter(F.col("doc_id") < 120), d,
+                      n_shards=2, id_col="doc_id", content_col="text")
+
+    def read_ts():
+        return sorted(tuple(r) for r in
+                      spimi.load_termstats(spark, d).collect())
+
+    before = read_ts()
+    assert before
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if src.endswith(".termstats.tmp"):
+            raise OSError("injected: refresh died between the renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(spimi.os, "rename", rename)
+    with pytest.raises(OSError, match="injected"):
+        spimi.add_documents(
+            spark, documents.filter(F.col("doc_id").between(120, 159)), d,
+            id_col="doc_id", content_col="text")
+    monkeypatch.setattr(spimi.os, "rename", real_rename)
+    assert not os.path.isdir(f"{d}/termstats")
+    assert read_ts() == before
+    terms = [t for t, _, _ in before[:5]]
+    assert wand._lookup_dfs_path(d, terms) == {
+        t: df for t, df, _ in before[:5]}
+    spimi.add_documents(
+        spark, documents.filter(F.col("doc_id").between(160, 199)), d,
+        id_col="doc_id", content_col="text")
+    assert os.path.isdir(f"{d}/termstats")
+    assert not os.path.exists(f"{d}/{spimi.TERMSTATS_ASIDE}")
+    after = read_ts()
+    assert after != before
+    # complete: equal to the distributed fold over every committed gen
+    with open(f"{d}/build.json") as f:
+        params = json.load(f)
+    monkeypatch.setattr(spimi, "DRIVER_TERMSTATS_MAX_ROWS", -1)
+    spimi._refresh_derived(spark, d, params)
+    assert read_ts() == after

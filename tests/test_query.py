@@ -513,8 +513,9 @@ MIXED_BATCH = [
 ]
 
 
-def _jobs(spark, fn):
-    """(fn's result, Spark jobs it ran), counted under its own job group."""
+def _job_tasks(spark, fn):
+    """(fn's result, Spark jobs, tasks) counted under fn's own job group,
+    after the listener bus has delivered every event to the tracker."""
     import uuid
 
     sc = spark.sparkContext
@@ -524,7 +525,18 @@ def _jobs(spark, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [st.getStageInfo(s) for j in jobs
+              for s in st.getJobInfo(j).stageIds]
+    return out, len(jobs), sum(s.numTasks for s in stages if s is not None)
+
+
+def _jobs(spark, fn):
+    """(fn's result, Spark jobs it ran), counted under its own job group."""
+    out, n_jobs, _ = _job_tasks(spark, fn)
+    return out, n_jobs
 
 
 def test_open_reader_caches_nothing(spark, served):
@@ -574,3 +586,52 @@ def test_cold_single_term_search_jobs(spark, served):
                                             k=10).collect())
     assert rows
     assert n <= 3
+
+
+# ---------------------------------------------------------------------------
+# Python tasks follow bytes read: literal frames start no task, the pruned
+# layout scan is sized by the bytes of the bucket files it touches
+# ---------------------------------------------------------------------------
+
+def test_empty_answers_run_no_job(spark, served):
+    """An out-of-vocabulary query.search, and empty bm25_topk,
+    phrase_match and wand.topk answers, run no Spark job: their empty
+    result is a literal frame, which folds away in the JVM."""
+    from gazetteer_spark.index import wand
+
+    lay, _ = served
+    idx = termindex._load_meta(lay)["source_index"]
+    calls = {
+        "search": lambda: Q.search(spark, lay, "zzqqxx", k=10),
+        "bm25_topk": lambda: termindex.bm25_topk(spark, lay, [(0, "zzqqxx")]),
+        "phrase_match": lambda: termindex.phrase_match(
+            spark, lay, [(0, "zzqqxx customer")]),
+        "wand.topk": lambda: wand.topk(spark, idx, [(0, "zzqqxx")], k=10),
+    }
+    for name, call in calls.items():
+        rows, n_jobs, _ = _job_tasks(spark, lambda: call().collect())
+        assert rows == [], name
+        assert n_jobs == 0, name
+
+
+def test_cold_search_tasks_follow_bytes_not_buckets(spark, served):
+    """A cold query.search whose terms fall in ≥ 3 buckets runs no more
+    tasks than a single-term one: the touched bucket files hold a few KB,
+    so the pruned scan (and every Python task over it) is one task
+    however many files it touches."""
+    lay, _ = served
+    meta = termindex._load_meta(lay)
+    words, buckets = [], set()
+    for w in ["customer", "filter", "group", "window", "sort", "key",
+              "order", "value", "spark", "join"]:
+        b = termindex._buckets_for(None, [w], meta["n_buckets"])[0]
+        if b not in buckets:
+            words.append(w)
+            buckets.add(b)
+    assert len(buckets) >= 3
+    one, _, t_one = _job_tasks(spark, lambda: _ranked(
+        Q.search(spark, lay, "customer", k=10)))
+    many, _, t_many = _job_tasks(spark, lambda: _ranked(
+        Q.search(spark, lay, " OR ".join(words), k=10)))
+    assert one and many
+    assert t_many <= t_one

@@ -1495,3 +1495,114 @@ def test_merge_bucket_makes_no_per_term_codec_call(monkeypatch):
     got = termindex._merge_bucket(pdf, True, True)
     assert [tuple(r) for r in got.itertuples(index=False)] == want
     assert len(got) == 13
+
+
+# ---- scan sizing, probe stats, relocation ----
+
+def test_pruned_scan_partitions_follow_bytes(spark, layout):
+    """The pruned layout scan runs in ceil(Σ touched bucket-file bytes /
+    maxPartitionBytes) partitions: ONE for this small layout's several
+    bucket files, more once maxPartitionBytes falls below a bucket file's
+    size — with row-identical answers on both sides of the rule."""
+    meta = termindex._load_meta(layout)
+    terms = ["spark", "join", "merge", "the", "window", "customer"]
+    files = termindex._bucket_files(layout, meta, terms)
+    assert len(files) >= 3
+    queries = [(0, "spark join merge"), (1, "the window"), (2, "customer")]
+
+    def answers():  # earlier tests add generations to the fixture index
+        post = sorted(tuple(r) for r in termindex.term_postings(
+            spark, layout, terms, allow_stale=True).collect())
+        ranked = _rows_of(termindex.bm25_topk(spark, layout, queries, k=10,
+                                              allow_stale=True))
+        return post, ranked
+
+    rows = termindex._pruned_rows(spark, layout, meta, terms)
+    assert rows.rdd.getNumPartitions() == 1
+    want = answers()
+    assert want[0] and want[1]
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(max(size for _, size in files) // 2))
+    try:
+        rows = termindex._pruned_rows(spark, layout, meta, terms)
+        assert rows.rdd.getNumPartitions() > 1
+        assert answers() == want
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_term_meta_path_blobs_invalid_utf8_stats(tmp_path):
+    """Row-group term stats compare as raw UTF-8 bytes: a bound that is
+    not valid UTF-8 (what a writer that truncates long values may emit)
+    still selects the row group holding the term, where decoding the
+    stat raised in every phrase/NEAR/AND prologue."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gazetteer_spark.hashing import term_bucket
+
+    n_buckets = 4
+    d = tmp_path / "terms" / f"bucket={term_bucket('alpha', n_buckets)}"
+    d.mkdir(parents=True)
+    vals = [b"alpha", b"beta", b"\xff\xfe"]
+    offsets = np.cumsum([0] + [len(v) for v in vals]).astype(np.int32)
+    term = pa.Array.from_buffers(  # unvalidated: the last value is not UTF-8
+        pa.string(), len(vals),
+        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(b"".join(vals))])
+    pq.write_table(pa.table({
+        "term": term,
+        "df": pa.array([3, 1, 2], pa.int64()),
+        "postings": pa.array([b"pa", b"pb", b"pc"]),
+    }), str(d / "part-00000.parquet"))
+    st = pq.ParquetFile(str(d / "part-00000.parquet")).metadata \
+        .row_group(0).column(0).statistics
+    with pytest.raises(UnicodeDecodeError):
+        st.max  # the stored bound really is invalid UTF-8
+    got = termindex._term_meta_path_blobs(
+        str(tmp_path), {"n_buckets": n_buckets}, ["alpha"], 10)
+    assert got == ({"alpha": 3}, {"alpha": b"pa"})
+
+
+def test_moved_index_and_layouts_still_serve(spark, documents,
+                                             tmp_path_factory):
+    """layout.json stores source_index relative to the layout dir, so an
+    index moved together with its term and fuzzy layouts still serves
+    (staleness check, prefix expansion over termstats); a layout that
+    stores the path absolute, as older layouts do, still loads."""
+    import json
+    import shutil
+
+    from gazetteer_spark import fuzzy as fz
+    from gazetteer_spark import query as Q
+
+    root = tmp_path_factory.mktemp("movable")
+    idx, lay, fzd = str(root / "idx"), str(root / "lay"), str(root / "fz")
+    spimi.build_index(spark, documents.filter(F.col("doc_id") < 200), idx,
+                      n_shards=2, id_col="doc_id", content_col="text",
+                      doclens=True)
+    termindex.build_term_layout(spark, idx, lay, n_buckets=4)
+    fz.build_fuzzy_layout(spark, idx, fzd)
+    for d in (lay, fzd):
+        with open(f"{d}/layout.json") as f:
+            assert json.load(f)["source_index"] == "../idx"
+    queries = ["customer", "cust*", "custmer~1 OR filter"]
+
+    def serve(lay, fzd):
+        return [_rows_of(Q.search(spark, lay, q, k=5, fuzzy_dir=fzd))
+                for q in queries]
+
+    want = serve(lay, fzd)
+    assert all(want)
+    moved = tmp_path_factory.mktemp("moved") / "here"
+    shutil.move(str(root), str(moved))
+    lay2, fzd2 = str(moved / "lay"), str(moved / "fz")
+    assert termindex._load_meta(lay2)["source_index"] == str(moved / "idx")
+    assert serve(lay2, fzd2) == want
+    with open(f"{lay2}/layout.json") as f:
+        meta = json.load(f)
+    meta["source_index"] = str(moved / "idx")  # an older, absolute layout
+    with open(f"{lay2}/layout.json", "w") as f:
+        json.dump(meta, f)
+    assert termindex._load_meta(lay2)["source_index"] == str(moved / "idx")
+    assert serve(lay2, fzd2) == want
