@@ -54,7 +54,7 @@ from .analyzer import (
 from .index import spimi
 from .index.codec import DelIndex, decode_postings
 from .index.spimi import FIELD_SEP
-from .index.wand import _idf
+from .index.wand import _idf, _local_topk
 from .session import local_frame
 
 DEFAULT_BOOST = 1.0
@@ -578,18 +578,10 @@ def _score_shard_fielded(
                         comp[key] = comp[key][keep]
         if len(cand_ids) == 0:
             continue
-        cand_s = scores()
-        rounded = np.round(cand_s, round_to) if round_to is not None else cand_s
-        if len(cand_ids) > k:
-            bar = np.partition(rounded, -k)[-k]
-            sel = rounded >= bar
-        else:
-            sel = np.ones(len(cand_ids), dtype=bool)
-        ids_e, raw_e, rnd_e = cand_ids[sel], cand_s[sel], rounded[sel]
-        order_e = np.lexsort((ids_e, -rnd_e))[:cap]
-        out_q.extend([qid] * len(order_e))
-        out_d.extend(ids_e[order_e].tolist())
-        out_s.extend(raw_e[order_e].tolist())
+        ids_e, raw_e = _local_topk(cand_ids, scores(), k, round_to, cap)
+        out_q.extend([qid] * len(ids_e))
+        out_d.extend(ids_e.tolist())
+        out_s.extend(raw_e.tolist())
     return pd.DataFrame(
         {
             "query_id": pd.Series(out_q, dtype="int32"),
@@ -729,7 +721,8 @@ def fielded_phrase_match(
 ) -> DataFrame:
     """(docid, n_occurrences): documents whose FIELD contains the exact
     token phrase — phrase-within-field, served entirely from the positional
-    fielded index (build with ``positions=True``).
+    fielded index (build with ``positions=True``); the one-query form of
+    :func:`fielded_phrase_match_batch`.
 
     Reference parity: the reference's containment matching runs against a
     specific name field, not whole-document text
@@ -739,18 +732,8 @@ def fielded_phrase_match(
     phrase machinery (index/phrase.py) applies verbatim to the composite
     terms: rarest-first intersection, positions decoded only for
     candidate-holding blocks, one (docid, count) shuffle."""
-    from .index import phrase as phrase_mod
-
-    params, seg = _fielded_positional(spark, index_dir, field, seg)
-    tokenize = get_analyzer(params.get("analyzer", "default")).py_tokenize
-    terms = tokenize(phrase)
-    if not terms:
-        raise ValueError("empty phrase after analysis")
-    comp = [field + FIELD_SEP + t for t in terms]
-    return phrase_mod._relevant_rows(seg, comp).groupBy("shard").applyInPandas(
-        lambda pdf: phrase_mod._phrase_shard(pdf, comp),
-        "docid long, n_occurrences long",
-    )
+    return fielded_phrase_match_batch(
+        spark, index_dir, [(0, field, phrase)], seg=seg).drop("query_id")
 
 
 def fielded_phrase_match_batch(
@@ -763,8 +746,6 @@ def fielded_phrase_match_batch(
     ONE Spark job: one segment scan pruned to the union of all queries'
     composite terms, one shuffle (the fielded twin of
     phrase.phrase_match_batch)."""
-    import pandas as pd
-
     from .index import phrase as phrase_mod
 
     if not queries:
@@ -778,28 +759,12 @@ def fielded_phrase_match_batch(
             raise ValueError(f"unknown field {field!r} (index has {flds})")
         terms = tokenize(phrase)
         if not terms:
-            raise ValueError(f"query {qid}: empty phrase after analysis")
+            raise ValueError(f"empty phrase after analysis (query {qid})")
         plans.append((int(qid), [field + FIELD_SEP + t for t in terms]))
     all_comp = sorted({c for _, comp in plans for c in comp})
-
-    def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for qid, comp in plans:
-            out = phrase_mod._phrase_shard(pdf, comp)
-            if not out.empty:
-                out.insert(0, "query_id", np.int32(qid))
-                frames.append(out)
-        if not frames:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype="int32"),
-                "docid": pd.Series([], dtype="int64"),
-                "n_occurrences": pd.Series([], dtype="int64"),
-            })
-        return pd.concat(frames, ignore_index=True)
-
-    return phrase_mod._relevant_rows(seg, all_comp).groupBy("shard").applyInPandas(
-        shard_fn, "query_id int, docid long, n_occurrences long"
-    )
+    return phrase_mod._per_query_shards(
+        phrase_mod._relevant_rows(seg, all_comp), plans,
+        phrase_mod._phrase_shard, "docid long, n_occurrences long")
 
 
 def fielded_near_match(
@@ -890,18 +855,8 @@ def _phrase_scored_shard_fielded(
         hit = np.searchsorted(cand, ids)
         ok = (hit < len(cand)) & (cand[np.minimum(hit, len(cand) - 1)] == ids)
         scores[hit[ok]] += idf * tfw[ok] / (K1 + tfw[ok])
-    rounded = np.round(scores, round_to) if round_to is not None else scores
-    if len(cand) > k:
-        bar = np.partition(rounded, -k)[-k]
-        sel = rounded >= bar
-    else:
-        sel = np.ones(len(cand), dtype=bool)
-    ids_e, raw_e, rnd_e = cand[sel], scores[sel], rounded[sel]
-    order_e = np.lexsort((ids_e, -rnd_e))[:cap]
-    return pd.DataFrame({
-        "docid": pd.Series(ids_e[order_e], dtype="int64"),
-        "score": pd.Series(raw_e[order_e], dtype="float64"),
-    })
+    ids_e, raw_e = _local_topk(cand, scores, k, round_to, cap)
+    return pd.DataFrame({"docid": ids_e, "score": raw_e})
 
 
 def fielded_phrase_topk(

@@ -40,9 +40,10 @@ import numpy as np
 BLOCK = 128
 
 # positions are in-document token indexes; 2^21 (2M tokens/doc) leaves 2^42
-# doc ranks per shard in the ``rank*MAXPOS + pos`` packed keys the
-# phrase/NEAR executors use — both far beyond any real segment. Enforced at
-# encode time: a position ≥ MAXPOS would silently alias packed keys.
+# doc ranks per shard in the ``rank*MAXPOS + pos`` packed keys of the
+# positional kernel (positional.py) — both far beyond any real segment.
+# Enforced at encode time: a position ≥ MAXPOS would silently alias packed
+# keys.
 MAXPOS = 1 << 21
 
 _THRESHOLDS = [np.uint64(1) << np.uint64(7 * i) for i in range(1, 10)]

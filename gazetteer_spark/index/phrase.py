@@ -13,8 +13,10 @@ BLOCK-SELECTIVE decode:
    machinery WAND uses for scores, applied to conjunction);
 2. for the final candidates, decode positions ONLY for those blocks
    (the positions blob embeds per-block byte offsets — codec layout);
-3. adjacency/proximity is an all-numpy intersection of packed int64 keys
-   ``rank(doc) * 2^21 + (pos - slot)``.
+3. each term's occurrences become (rank of doc among the candidates,
+   position) arrays, and the positional kernel (``positional.py``, the
+   one home of the packed-key math) matches phrase, NEAR and NEAR/n on
+   them.
 
 A phrase containing "the" therefore touches ~|candidates|/128-rounded
 blocks of "the"'s postings and positions, not its full df.
@@ -36,15 +38,14 @@ from pyspark.sql import functions as F
 from ..analyzer import get_analyzer
 from ..session import local_frame
 from .codec import (
-    MAXPOS,  # noqa: F401 — packed-key base; guarded at encode time in codec
     DelIndex,
     decode_block_meta,
     decode_blocks,
-    decode_positions,
     decode_positions_blocks,
     decode_postings,
     gather_runs,
 )
+from .positional import near_n_slots, near_slots, phrase_slots
 
 _EMPTY = (
     np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0, np.int64)
@@ -142,146 +143,59 @@ def _term_positions(segs: list[_Seg], cand: np.ndarray,
     return ids, tfs, flat
 
 
-def _packed_keys(ids, tfs, flat, common: np.ndarray, slot: int):
-    """int64 keys rank(doc)*MAXPOS + (pos - slot) for postings of docs in
-    ``common`` (sorted); negatives dropped."""
-    idx = np.searchsorted(common, ids)
-    keep = (idx < len(common)) & (common[np.minimum(idx, len(common) - 1)] == ids)
-    ranks = np.repeat(idx[keep], tfs[keep])
-    pos = flat[np.repeat(keep, tfs)]
-    shifted = pos - slot
-    ok = shifted >= 0
-    return ranks[ok] * MAXPOS + shifted[ok]
-
-
-def _phrase_shard(pdf: pd.DataFrame, terms: list[str]) -> pd.DataFrame:
-    """One shard's relevant segment rows → (docid, n_occurrences)."""
-    empty = pd.DataFrame({"docid": pd.Series([], dtype="int64"),
-                          "n_occurrences": pd.Series([], dtype="int64")})
+def _candidate_slots(pdf: pd.DataFrame, terms: list[str]):
+    """One shard's (common, slots): ``common`` the sorted docids holding
+    every term (rarest-first block-selective intersection), ``slots[i]``
+    the (ranks into ``common``, positions) of ``terms[i]``'s occurrences
+    in them. None when a term is absent or no doc holds them all."""
     per_term, df_tot = _term_handles(pdf)
     distinct = sorted(set(terms))
     if any(t not in per_term for t in distinct):
-        return empty  # conjunctive: a missing term empties this shard
-
+        return None  # conjunctive: a missing term empties this shard
     dels = DelIndex.from_pdf(pdf)
     order = sorted(distinct, key=lambda t: (df_tot[t], t))
     common = _intersect_candidates(per_term, order, dels)
     if len(common) == 0:
-        return empty
+        return None
+    occ = {}
+    for t in distinct:
+        ids, tfs, flat = _term_positions(per_term[t], common, dels)
+        idx = np.searchsorted(common, ids)
+        keep = (idx < len(common)) & (
+            common[np.minimum(idx, len(common) - 1)] == ids)
+        occ[t] = np.repeat(idx[keep], tfs[keep]), flat[np.repeat(keep, tfs)]
+    return common, [occ[t] for t in terms]
 
-    decoded = {t: _term_positions(per_term[t], common, dels) for t in distinct}
-    matched = _packed_keys(*decoded[terms[0]], common, 0)
-    for i, t in enumerate(terms[1:], start=1):
-        if len(matched) == 0:
-            return empty
-        matched = np.intersect1d(
-            matched, _packed_keys(*decoded[t], common, i), assume_unique=True
-        )
-    if len(matched) == 0:
-        return empty
-    ranks, counts = np.unique(matched // MAXPOS, return_counts=True)
-    return pd.DataFrame(
-        {"docid": common[ranks].astype(np.int64),
-         "n_occurrences": counts.astype(np.int64)}
-    )
+
+def _match_shard(pdf: pd.DataFrame, terms: list[str], match,
+                 col: str) -> pd.DataFrame:
+    """One shard's relevant segment rows → (docid, ``col``) counts."""
+    got = _candidate_slots(pdf, terms)
+    if got is None:
+        return _empty_frame(f"docid long, {col} long")
+    common, slots = got
+    ranks, counts = match(slots)
+    return pd.DataFrame({"docid": common[ranks].astype(np.int64), col: counts})
+
+
+def _phrase_shard(pdf: pd.DataFrame, terms: list[str]) -> pd.DataFrame:
+    """One shard → (docid, n_occurrences)."""
+    return _match_shard(pdf, terms, phrase_slots, "n_occurrences")
 
 
 def _near_shard(pdf: pd.DataFrame, term_a: str, term_b: str, k: int) -> pd.DataFrame:
     """One shard → (docid, n_pairs): occurrence pairs of (term_a, term_b)
-    within token distance ≤ k, counted fully vectorized via packed keys."""
-    empty = pd.DataFrame({"docid": pd.Series([], dtype="int64"),
-                          "n_pairs": pd.Series([], dtype="int64")})
-    per_term, df_tot = _term_handles(pdf)
-    if term_a not in per_term or term_b not in per_term:
-        return empty
-    dels = DelIndex.from_pdf(pdf)
-    order = sorted([term_a, term_b], key=lambda t: (df_tot[t], t))
-    common = _intersect_candidates(per_term, order, dels)
-    if len(common) == 0:
-        return empty
-
-    ids_a, tfs_a, flat_a = _term_positions(per_term[term_a], common, dels)
-    ids_b, tfs_b, flat_b = _term_positions(per_term[term_b], common, dels)
-
-    idx = np.searchsorted(common, ids_a)
-    keep = (idx < len(common)) & (common[np.minimum(idx, len(common) - 1)] == ids_a)
-    ranks_a = np.repeat(idx[keep], tfs_a[keep])
-    pos_a = flat_a[np.repeat(keep, tfs_a)]
-    keys_a = ranks_a * MAXPOS + pos_a
-    keys_b = _packed_keys(ids_b, tfs_b, flat_b, common, 0)
-    # per a-occurrence: b-occurrences in the same doc within ±k (window
-    # clamped inside the doc's key range, so it never leaks across docs)
-    base = ranks_a * MAXPOS
-    lo = np.maximum(keys_a - k, base)
-    hi = np.minimum(keys_a + k, base + MAXPOS - 1)
-    counts = (np.searchsorted(keys_b, hi, side="right")
-              - np.searchsorted(keys_b, lo, side="left"))
-    n_pairs = np.bincount(ranks_a, weights=counts, minlength=len(common))
-    nz = np.nonzero(n_pairs)[0]
-    if len(nz) == 0:
-        return empty
-    return pd.DataFrame({"docid": common[nz].astype(np.int64),
-                         "n_pairs": n_pairs[nz].astype(np.int64)})
+    within token distance ≤ k."""
+    return _match_shard(pdf, [term_a, term_b], near_slots(k), "n_pairs")
 
 
 def _near_n_shard(
     pdf: pd.DataFrame, terms: list[str], k: int, ordered: bool
 ) -> pd.DataFrame:
-    """One shard → (docid, n_anchors): N-term proximity.
-
-    Unordered: an anchor = an occurrence of terms[0] with, for EVERY other
-    term, at least one occurrence within token distance ≤ k of the anchor.
-    Ordered: an anchor = an occurrence p₁ of terms[0] starting a chain
-    p₁ < p₂ < … < p_N with each gap ≤ k (terms in the given order) —
-    computed by backward reachability (filter term i's occurrences to those
-    with a reachable term-i+1 occurrence in (p, p+k]), all searchsorted."""
-    empty = pd.DataFrame({"docid": pd.Series([], dtype="int64"),
-                          "n_anchors": pd.Series([], dtype="int64")})
-    per_term, df_tot = _term_handles(pdf)
-    distinct = sorted(set(terms))
-    if any(t not in per_term for t in distinct):
-        return empty
-    dels = DelIndex.from_pdf(pdf)
-    order = sorted(distinct, key=lambda t: (df_tot[t], t))
-    common = _intersect_candidates(per_term, order, dels)
-    if len(common) == 0:
-        return empty
-    keys = {
-        t: _packed_keys(*_term_positions(per_term[t], common, dels), common, 0)
-        for t in distinct
-    }
-    anchors = keys[terms[0]]
-    if len(anchors) == 0:
-        return empty
-    base = (anchors // MAXPOS) * MAXPOS
-    if not ordered:
-        ok = np.ones(len(anchors), dtype=bool)
-        for t in terms[1:]:
-            other = keys[t]
-            lo = np.maximum(anchors - k, base)
-            hi = np.minimum(anchors + k, base + MAXPOS - 1)
-            cnt = (np.searchsorted(other, hi, side="right")
-                   - np.searchsorted(other, lo, side="left"))
-            ok &= cnt > 0
-        good = anchors[ok]
-    else:
-        reach = keys[terms[-1]]
-        for t in reversed(terms[:-1]):
-            cur = keys[t]
-            cur_base = (cur // MAXPOS) * MAXPOS
-            lo = cur + 1  # strictly increasing positions, same doc
-            hi = np.minimum(cur + k, cur_base + MAXPOS - 1)
-            cnt = (np.searchsorted(reach, hi, side="right")
-                   - np.searchsorted(reach, lo, side="left"))
-            reach = cur[cnt > 0]
-            if len(reach) == 0:
-                return empty
-        good = reach
-    if len(good) == 0:
-        return empty
-    ranks, counts = np.unique(good // MAXPOS, return_counts=True)
-    return pd.DataFrame({"docid": common[ranks].astype(np.int64),
-                         "n_anchors": counts.astype(np.int64)})
+    """One shard → (docid, n_anchors): N-term proximity (unordered: every
+    other term within ≤ k of an anchor occurrence of terms[0]; ordered: a
+    strictly increasing chain through the terms, each gap ≤ k)."""
+    return _match_shard(pdf, terms, near_n_slots(k, ordered), "n_anchors")
 
 
 def _phrase_scored_shard(
@@ -294,17 +208,14 @@ def _phrase_scored_shard(
     per-shard emission using the engine's rounded-bar + (score desc, docid
     asc) pinning — the same contract as wand._score_shard."""
     from .. import B, K1
+    from .wand import _doc_meta, _local_topk
 
-    empty = pd.DataFrame(columns=["docid", "score"]).astype(
-        {"docid": "int64", "score": "float64"})
     matched = _phrase_shard(pdf, terms)
     if matched.empty:
-        return empty
+        return _empty_frame("docid long, score double")
     cand = matched["docid"].to_numpy(dtype=np.int64)  # sorted (common order)
     dels = DelIndex.from_pdf(pdf)
     per_term, _ = _term_handles(pdf)
-    from .wand import _doc_meta
-
     all_ids, all_lens = _doc_meta(pdf[pdf["kind"] == "docs"])
     norm = K1 * (1.0 - B + B * all_lens.astype(np.float64) / avgdl)
     scores = np.zeros(len(cand))
@@ -315,18 +226,37 @@ def _phrase_scored_shard(
         ok = (hit < len(cand)) & (cand[np.minimum(hit, len(cand) - 1)] == ids)
         pos = np.searchsorted(all_ids, ids[ok])
         scores[hit[ok]] += idf * (tfs[ok] * (K1 + 1.0)) / (tfs[ok] + norm[pos])
-    rounded = np.round(scores, round_to) if round_to is not None else scores
-    if len(cand) > k:
-        bar = np.partition(rounded, -k)[-k]
-        sel = rounded >= bar
-    else:
-        sel = np.ones(len(cand), dtype=bool)
-    ids_e, raw_e, rnd_e = cand[sel], scores[sel], rounded[sel]
-    order_e = np.lexsort((ids_e, -rnd_e))[:cap]
+    ids_e, raw_e = _local_topk(cand, scores, k, round_to, cap)
+    return pd.DataFrame({"docid": ids_e, "score": raw_e})
+
+
+_DTYPES = {"int": "int32", "long": "int64", "double": "float64"}
+
+
+def _empty_frame(schema: str) -> pd.DataFrame:
+    """A zero-row pandas frame typed by a DDL schema of int/long/double."""
     return pd.DataFrame({
-        "docid": pd.Series(ids_e[order_e], dtype="int64"),
-        "score": pd.Series(raw_e[order_e], dtype="float64"),
-    })
+        name: pd.Series([], dtype=_DTYPES[typ])
+        for name, typ in (c.split() for c in schema.split(","))})
+
+
+def _per_query_shards(rows: DataFrame, plans: list[tuple[int, object]],
+                      one, schema: str) -> DataFrame:
+    """(query_id, *``schema``): every plan's ``one(shard_pdf, plan)``
+    frame, tagged with its query_id — N queries in ONE job over ``rows``
+    grouped by shard."""
+    def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        frames = []
+        for qid, plan in plans:
+            out = one(pdf, plan)
+            if not out.empty:
+                out.insert(0, "query_id", np.int32(qid))
+                frames.append(out)
+        return (pd.concat(frames, ignore_index=True) if frames
+                else _empty_frame(f"query_id int, {schema}"))
+
+    return rows.groupBy("shard").applyInPandas(
+        shard_fn, f"query_id int, {schema}")
 
 
 def _positional_segments(spark: SparkSession, index_dir: str):
@@ -351,19 +281,49 @@ def _relevant_rows(seg: DataFrame, terms: list[str]) -> DataFrame:
     )
 
 
+def _tokenizer(params: dict):
+    """The analyzer of a build.json or layout.json ``params``."""
+    return get_analyzer(params.get("analyzer", "default")).py_tokenize
+
+
+# query plans shared with termindex's layout twins: (query_id, analyzed
+# terms in slot order)
+def _phrase_plans(tokenize, queries: list[tuple[int, str]]):
+    plans = [(int(qid), tokenize(text)) for qid, text in queries]
+    if any(not ts for _, ts in plans):
+        raise ValueError("empty phrase after analysis")
+    return plans
+
+
+def _near_n_plans(tokenize, queries: list[tuple[int, list[str]]]):
+    plans = []
+    for qid, terms in queries:
+        analyzed = [t for term in terms for t in tokenize(term)]
+        if len(analyzed) < 2:
+            raise ValueError(
+                f"NEAR/n needs at least two analyzed terms (query {qid})")
+        plans.append((int(qid), analyzed))
+    return plans
+
+
+def _near_pair(tokenize, term_a: str, term_b: str) -> list[str]:
+    ta, tb = (tokenize(term_a) or [""])[0], (tokenize(term_b) or [""])[0]
+    if not ta or not tb or ta == tb:
+        raise ValueError("NEAR needs two distinct non-empty analyzed terms")
+    return [ta, tb]
+
+
+def _all_terms(plans) -> list[str]:
+    return sorted({t for _, ts in plans for t in ts})
+
+
 def phrase_match(
     spark: SparkSession, index_dir: str, phrase: str
 ) -> DataFrame:
     """(docid, n_occurrences): documents containing the exact token phrase,
-    with occurrence counts — served entirely from the positional index."""
-    params, seg = _positional_segments(spark, index_dir)
-    terms = get_analyzer(params.get("analyzer", "default")).py_tokenize(phrase)
-    if not terms:
-        raise ValueError("empty phrase after analysis")
-    return _relevant_rows(seg, terms).groupBy("shard").applyInPandas(
-        lambda pdf: _phrase_shard(pdf, terms),
-        "docid long, n_occurrences long",
-    )
+    with occurrence counts — served entirely from the positional index
+    (the one-query form of :func:`phrase_match_batch`)."""
+    return phrase_match_batch(spark, index_dir, [(0, phrase)]).drop("query_id")
 
 
 def near_match(
@@ -374,10 +334,7 @@ def near_match(
     query served from the positional index. Same scan shape as
     :func:`phrase_match`."""
     params, seg = _positional_segments(spark, index_dir)
-    tokenize = get_analyzer(params.get("analyzer", "default")).py_tokenize
-    ta, tb = (tokenize(term_a) or [""])[0], (tokenize(term_b) or [""])[0]
-    if not ta or not tb or ta == tb:
-        raise ValueError("NEAR needs two distinct non-empty analyzed terms")
+    ta, tb = _near_pair(_tokenizer(params), term_a, term_b)
     return _relevant_rows(seg, [ta, tb]).groupBy("shard").applyInPandas(
         lambda pdf: _near_shard(pdf, ta, tb, k),
         "docid long, n_pairs long",
@@ -391,17 +348,10 @@ def near_match_n(
     """(docid, n_anchors): generalized N-term proximity from the positional
     index. Unordered: anchors (occurrences of terms[0]) with every other
     term within token distance ≤ k. Ordered: anchors starting a strictly-
-    increasing chain through the terms with each gap ≤ k. Same scan shape
-    as phrase_match (term-pruned segment scan, one shuffle of results)."""
-    params, seg = _positional_segments(spark, index_dir)
-    tokenize = get_analyzer(params.get("analyzer", "default")).py_tokenize
-    analyzed = [t for term in terms for t in tokenize(term)]
-    if len(analyzed) < 2:
-        raise ValueError("NEAR/n needs at least two analyzed terms")
-    return _relevant_rows(seg, analyzed).groupBy("shard").applyInPandas(
-        lambda pdf: _near_n_shard(pdf, analyzed, k, ordered),
-        "docid long, n_anchors long",
-    )
+    increasing chain through the terms with each gap ≤ k. The one-query
+    form of :func:`near_match_n_batch`."""
+    return near_match_n_batch(spark, index_dir, [(0, terms)], k=k,
+                              ordered=ordered).drop("query_id")
 
 
 def phrase_match_batch(
@@ -411,32 +361,11 @@ def phrase_match_batch(
     one segment scan pruned to the UNION of all queries' terms, one shuffle.
     At serving scale the per-job scheduling cost (~0.5 s locally) dominates
     single phrase queries; batching amortizes it exactly like wand's
-    topk_batch. Row-identical to per-query :func:`phrase_match`."""
+    topk_batch."""
     params, seg = _positional_segments(spark, index_dir)
-    tokenize = get_analyzer(params.get("analyzer", "default")).py_tokenize
-    plans = [(int(qid), tokenize(text)) for qid, text in queries]
-    if any(not ts for _, ts in plans):
-        raise ValueError("empty phrase after analysis")
-    all_terms = sorted({t for _, ts in plans for t in ts})
-
-    def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for qid, ts in plans:
-            out = _phrase_shard(pdf, ts)
-            if not out.empty:
-                out.insert(0, "query_id", np.int32(qid))
-                frames.append(out)
-        if not frames:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype="int32"),
-                "docid": pd.Series([], dtype="int64"),
-                "n_occurrences": pd.Series([], dtype="int64"),
-            })
-        return pd.concat(frames, ignore_index=True)
-
-    return _relevant_rows(seg, all_terms).groupBy("shard").applyInPandas(
-        shard_fn, "query_id int, docid long, n_occurrences long"
-    )
+    plans = _phrase_plans(_tokenizer(params), queries)
+    return _per_query_shards(_relevant_rows(seg, _all_terms(plans)), plans,
+                             _phrase_shard, "docid long, n_occurrences long")
 
 
 def near_match_n_batch(
@@ -446,33 +375,11 @@ def near_match_n_batch(
     """(query_id, docid, n_anchors): N proximity queries in one job (same
     batching contract as :func:`phrase_match_batch`)."""
     params, seg = _positional_segments(spark, index_dir)
-    tokenize = get_analyzer(params.get("analyzer", "default")).py_tokenize
-    plans = []
-    for qid, terms in queries:
-        analyzed = [t for term in terms for t in tokenize(term)]
-        if len(analyzed) < 2:
-            raise ValueError(f"NEAR/n query {qid} needs >= 2 analyzed terms")
-        plans.append((int(qid), analyzed))
-    all_terms = sorted({t for _, ts in plans for t in ts})
-
-    def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for qid, ts in plans:
-            out = _near_n_shard(pdf, ts, k, ordered)
-            if not out.empty:
-                out.insert(0, "query_id", np.int32(qid))
-                frames.append(out)
-        if not frames:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype="int32"),
-                "docid": pd.Series([], dtype="int64"),
-                "n_anchors": pd.Series([], dtype="int64"),
-            })
-        return pd.concat(frames, ignore_index=True)
-
-    return _relevant_rows(seg, all_terms).groupBy("shard").applyInPandas(
-        shard_fn, "query_id int, docid long, n_anchors long"
-    )
+    plans = _near_n_plans(_tokenizer(params), queries)
+    return _per_query_shards(
+        _relevant_rows(seg, _all_terms(plans)), plans,
+        lambda pdf, ts: _near_n_shard(pdf, ts, k, ordered),
+        "docid long, n_anchors long")
 
 
 def phrase_topk_batch(
@@ -480,18 +387,21 @@ def phrase_topk_batch(
     k: int = 10, round_to: int | None = 4, tie_cap: int = 4096,
 ) -> DataFrame:
     """(query_id, rank, docid, score): N RANKED phrase queries in one
-    scoring job + one top-k window — the batch twin of :func:`phrase_topk`
-    (rank-identical per query)."""
+    scoring job + one top-k window. Documents containing the exact token
+    phrase, ordered by BM25 over the phrase's terms with the engine's
+    (score desc, docid asc) pinning. The reference ranks its containment
+    matches inside the candidate ladder (J7, `PoiAddrJoinBuilder.java:67-
+    189`); this is that composition served from the positional index:
+    phrase candidates and their tfs come from the same block-selective
+    decode, doclens from the shard's docmeta, df/avgdl from the committed
+    stats."""
     from .spimi import load_stats, load_termstats
     from .wand import _idf, _lookup_dfs
 
     params, seg = _positional_segments(spark, index_dir)
     stats = load_stats(index_dir)
-    tokenize = get_analyzer(params.get("analyzer", "default")).py_tokenize
-    plans = [(int(qid), tokenize(text)) for qid, text in queries]
-    if any(not ts for _, ts in plans):
-        raise ValueError("empty phrase after analysis")
-    all_terms = sorted({t for _, ts in plans for t in ts})
+    plans = _phrase_plans(_tokenizer(params), queries)
+    all_terms = _all_terms(plans)
     termstats = load_termstats(spark, index_dir)
     df_by_term = _lookup_dfs(termstats, all_terms)
     qweights = {t: _idf(stats["n_docs"], df_by_term[t])
@@ -507,26 +417,11 @@ def phrase_topk_batch(
         | (F.col("kind") == "docs")
         | (F.col("kind") == "dels")
     )
-
-    def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for qid, ts in live:
-            out = _phrase_scored_shard(
-                pdf, ts, qweights, stats["avgdl"], k, round_to, tie_cap)
-            if not out.empty:
-                out.insert(0, "query_id", np.int32(qid))
-                frames.append(out)
-        if not frames:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype="int32"),
-                "docid": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            })
-        return pd.concat(frames, ignore_index=True)
-
-    local = relevant.groupBy("shard").applyInPandas(
-        shard_fn, "query_id int, docid long, score double"
-    )
+    local = _per_query_shards(
+        relevant, live,
+        lambda pdf, ts: _phrase_scored_shard(
+            pdf, ts, qweights, stats["avgdl"], k, round_to, tie_cap),
+        "docid long, score double")
     from pyspark.sql import Window as W
 
     score = (F.round(F.col("score"), round_to) if round_to is not None
@@ -545,47 +440,8 @@ def phrase_topk(
     spark: SparkSession, index_dir: str, phrase: str, k: int = 10,
     round_to: int | None = 4, tie_cap: int = 4096,
 ) -> DataFrame:
-    """(rank, docid, score): RANKED phrase — documents containing the exact
-    token phrase, ordered by BM25 over the phrase's terms with the engine's
-    (score desc, docid asc) pinning. The reference ranks its containment
-    matches inside the candidate ladder (J7, `PoiAddrJoinBuilder.java:67-
-    189`); this is that composition served from the positional index:
-    phrase candidates and their tfs come from the same block-selective
-    decode, doclens from the shard's docmeta, df/avgdl from the committed
-    stats — one scoring job + the global top-k window."""
-    from .spimi import load_stats, load_termstats
-    from .wand import _idf, _lookup_dfs
-
-    params, seg = _positional_segments(spark, index_dir)
-    stats = load_stats(index_dir)
-    tokenize = get_analyzer(params.get("analyzer", "default")).py_tokenize
-    terms = tokenize(phrase)
-    if not terms:
-        raise ValueError("empty phrase after analysis")
-    termstats = load_termstats(spark, index_dir)
-    df_by_term = _lookup_dfs(termstats, sorted(set(terms)))
-    if any(t not in df_by_term for t in terms):
-        return local_frame(spark, [], "rank int, docid long, score double")
-    qweights = {t: _idf(stats["n_docs"], df_by_term[t]) for t in set(terms)}
-    relevant = seg.filter(
-        ((F.col("kind") == "post") & F.col("term").isin(sorted(set(terms))))
-        | (F.col("kind") == "docs")
-        | (F.col("kind") == "dels")
-    )
-    local = relevant.groupBy("shard").applyInPandas(
-        lambda pdf: _phrase_scored_shard(
-            pdf, terms, qweights, stats["avgdl"], k, round_to, tie_cap
-        ),
-        "docid long, score double",
-    )
-    from pyspark.sql import Window as W
-
-    score = (F.round(F.col("score"), round_to) if round_to is not None
-             else F.col("score"))
-    win = W.orderBy(F.col("score").desc(), F.col("docid").asc())
-    return (
-        local.select("docid", score.alias("score"))
-        .withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("rank", "docid", "score")
-    )
+    """(rank, docid, score): one RANKED phrase — the one-query form of
+    :func:`phrase_topk_batch`."""
+    return phrase_topk_batch(spark, index_dir, [(0, phrase)], k=k,
+                             round_to=round_to,
+                             tie_cap=tie_cap).drop("query_id")

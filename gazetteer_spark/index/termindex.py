@@ -61,12 +61,12 @@ from pyspark.sql import Window as W
 from .. import B, K1
 from ..session import local_frame
 from .codec import (
-    MAXPOS,
     DelIndex,
     _varbyte_decode,
     _varbyte_encode,
     decode_postings,
 )
+from .positional import near_n_slots, near_slots, phrase_slots
 
 TERM_LAYOUT_SCHEMA = (
     "bucket int, term string, df long, cf long, "
@@ -1503,8 +1503,8 @@ def bm25_and_topk(
 #      layout's blockmeta;
 #   3. occurrence rows (query, slot, docid, pos) shuffle hash-partitioned
 #      by docid — bounded by candidates × phrase slots × tf, NOT by df —
-#      and a vectorized per-partition verifier runs the packed-key
-#      adjacency/proximity math of phrase.py on each docid's slice.
+#      and a vectorized per-partition verifier runs the positional
+#      kernel (positional.py) on each docid's slice.
 #
 # At 10^12 docs a phrase point query therefore touches O(its terms')
 # buckets + a candidate-bounded shuffle; queries whose RAREST term exceeds
@@ -1760,18 +1760,6 @@ def _occurrence_rows(
     )
 
 
-def _slot_keys(pdf: pd.DataFrame):
-    """Group slice → (uniq docids, per-doc ranks, slot array, pos array):
-    the packed-key ingredients of phrase.py's shard verifiers, rebuilt from
-    shuffled occurrence rows."""
-    docids = pdf["docid"].to_numpy(np.int64)
-    slots = pdf["slot"].to_numpy()
-    pos = pdf["pos"].to_numpy(np.int64)
-    uniq = np.unique(docids)
-    ranks = np.searchsorted(uniq, docids)
-    return uniq, ranks, slots, pos
-
-
 def _default_parts(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
@@ -1804,6 +1792,16 @@ def _positional_prologue(
     return rows, df_by_term, plans, cand_by_qid
 
 
+def _positional_meta(layout_dir: str, allow_stale: bool):
+    """(meta, tokenizer) of a positional layout, checked for staleness."""
+    from .phrase import _tokenizer
+
+    meta = _load_meta(layout_dir)
+    _check_positional_layout(meta)
+    _check_stale(meta, allow_stale)
+    return meta, _tokenizer(meta)
+
+
 def phrase_match(
     spark: SparkSession,
     layout_dir: str,
@@ -1822,34 +1820,33 @@ def phrase_match(
     Reference analog: token-sequence containment as a point query
     (`addresses/impl/NamesMatcherImpl.java:38-46`) over per-key side
     indexes (`utils/index/MMapBBIndex.java:27-54`)."""
-    from ..analyzer import get_analyzer
+    from .phrase import _phrase_plans
 
-    meta = _load_meta(layout_dir)
-    _check_positional_layout(meta)
-    _check_stale(meta, allow_stale)
-    tokenize = get_analyzer(meta["analyzer"]).py_tokenize
-    plans_all = [(int(qid), tokenize(text)) for qid, text in queries]
-    if any(not ts for _, ts in plans_all):
-        raise ValueError("empty phrase after analysis")
-    rows, df_by_term, plans, cand_by_qid = _positional_prologue(
-        spark, layout_dir, meta, plans_all, gate_cap
-    )
-    out_schema = "query_id int, docid long, n_occurrences long"
-    if not plans:
-        return local_frame(spark, [], out_schema)
-    return _phrase_match_core(spark, rows, plans, cand_by_qid, n_parts)
+    meta, tokenize = _positional_meta(layout_dir, allow_stale)
+    rows, _, plans, cand_by_qid = _positional_prologue(
+        spark, layout_dir, meta, _phrase_plans(tokenize, queries), gate_cap)
+    return _verify_slots(spark, rows, plans, cand_by_qid, n_parts,
+                         phrase_slots, "n_occurrences")
 
 
-def _phrase_match_core(
+def _verify_slots(
     spark: SparkSession,
     rows: DataFrame,
     plans: list[tuple[int, list[str]]],
     cand_by_qid: dict[int, np.ndarray | None],
     n_parts: int | None,
+    match,
+    col: str,
 ) -> DataFrame:
-    """Verify stage of :func:`phrase_match`, reusable with a prologue
-    already computed (phrase_topk shares one metadata probe + gate)."""
-    out_schema = "query_id int, docid long, n_occurrences long"
+    """(query_id, docid, ``col``): the verify stage shared by the
+    positional paths. Occurrence rows of every (query, slot) shuffle to
+    (query_id, part) groups; each group's per-slot (rank, position)
+    arrays go through ``match``, one of positional.py's slot matchers.
+    No plans (every query had an absent term): an empty literal frame,
+    no job."""
+    schema = f"query_id int, docid long, {col} long"
+    if not plans:
+        return local_frame(spark, [], schema)
     subs_by_term: dict[str, list[tuple[int, int]]] = {}
     for qid, ts in plans:
         for slot, t in enumerate(ts):
@@ -1859,32 +1856,19 @@ def _phrase_match_core(
                            n_parts or _default_parts(spark))
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "query_id": pd.Series([], dtype="int32"),
-            "docid": pd.Series([], dtype="int64"),
-            "n_occurrences": pd.Series([], dtype="int64")})
-        if pdf.empty:
-            return empty
+        # called once per existing (query_id, part) group: never empty
         qid = int(pdf["query_id"].iloc[0])
-        uniq, ranks, slots, pos = _slot_keys(pdf)
-        matched = None
-        for s in range(n_slots[qid]):
-            m = slots == s
-            shifted = pos[m] - s
-            ok = shifted >= 0
-            keys = ranks[m][ok] * MAXPOS + shifted[ok]
-            matched = (keys if matched is None
-                       else np.intersect1d(matched, keys, assume_unique=True))
-            if len(matched) == 0:
-                return empty
-        rk, counts = np.unique(matched // MAXPOS, return_counts=True)
-        return pd.DataFrame({
-            "query_id": np.int32(qid),
-            "docid": uniq[rk],
-            "n_occurrences": counts.astype(np.int64)})
+        docids = pdf["docid"].to_numpy(np.int64)
+        slots = pdf["slot"].to_numpy()
+        pos = pdf["pos"].to_numpy(np.int64)
+        uniq = np.unique(docids)
+        ranks = np.searchsorted(uniq, docids)
+        ranks, counts = match([(ranks[slots == s], pos[slots == s])
+                               for s in range(n_slots[qid])])
+        return pd.DataFrame({"query_id": np.int32(qid),
+                             "docid": uniq[ranks], col: counts})
 
-    return (occ.groupBy("query_id", "part")
-            .applyInPandas(lambda pdf: verify(pdf), out_schema))
+    return occ.groupBy("query_id", "part").applyInPandas(verify, schema)
 
 
 def near_match_n(
@@ -1904,80 +1888,13 @@ def near_match_n(
     term within token distance ≤ k. Ordered: anchors starting a strictly-
     increasing chain through the terms with each gap ≤ k. Same scale
     shape as :func:`phrase_match` (roles are conjunctive either way)."""
-    from ..analyzer import get_analyzer
+    from .phrase import _near_n_plans
 
-    meta = _load_meta(layout_dir)
-    _check_positional_layout(meta)
-    _check_stale(meta, allow_stale)
-    tokenize = get_analyzer(meta["analyzer"]).py_tokenize
-    plans_all = []
-    for qid, terms in queries:
-        analyzed = [t for term in terms for t in tokenize(term)]
-        if len(analyzed) < 2:
-            raise ValueError("NEAR/n needs at least two analyzed terms")
-        plans_all.append((int(qid), analyzed))
-    rows, df_by_term, plans, cand_by_qid = _positional_prologue(
-        spark, layout_dir, meta, plans_all, gate_cap
-    )
-    out_schema = "query_id int, docid long, n_anchors long"
-    if not plans:
-        return local_frame(spark, [], out_schema)
-    subs_by_term: dict[str, list[tuple[int, int]]] = {}
-    for qid, ts in plans:
-        for role, t in enumerate(ts):
-            subs_by_term.setdefault(t, []).append((qid, role))
-    n_roles = {qid: len(ts) for qid, ts in plans}
-    occ = _occurrence_rows(spark, rows, subs_by_term, cand_by_qid,
-                           n_parts or _default_parts(spark))
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "query_id": pd.Series([], dtype="int32"),
-            "docid": pd.Series([], dtype="int64"),
-            "n_anchors": pd.Series([], dtype="int64")})
-        if pdf.empty:
-            return empty
-        qid = int(pdf["query_id"].iloc[0])
-        uniq, ranks, slots, pos = _slot_keys(pdf)
-        keys = {r: np.sort(ranks[slots == r] * MAXPOS + pos[slots == r])
-                for r in range(n_roles[qid])}
-        anchors = keys[0]
-        if len(anchors) == 0:
-            return empty
-        base = (anchors // MAXPOS) * MAXPOS
-        if not ordered:
-            ok = np.ones(len(anchors), dtype=bool)
-            for role in range(1, n_roles[qid]):
-                other = keys[role]
-                lo = np.maximum(anchors - k, base)
-                hi = np.minimum(anchors + k, base + MAXPOS - 1)
-                cnt = (np.searchsorted(other, hi, side="right")
-                       - np.searchsorted(other, lo, side="left"))
-                ok &= cnt > 0
-            good = anchors[ok]
-        else:
-            reach = keys[n_roles[qid] - 1]
-            for role in range(n_roles[qid] - 2, -1, -1):
-                cur = keys[role]
-                cur_base = (cur // MAXPOS) * MAXPOS
-                lo = cur + 1  # strictly increasing positions, same doc
-                hi = np.minimum(cur + k, cur_base + MAXPOS - 1)
-                cnt = (np.searchsorted(reach, hi, side="right")
-                       - np.searchsorted(reach, lo, side="left"))
-                reach = cur[cnt > 0]
-                if len(reach) == 0:
-                    return empty
-            good = reach
-        if len(good) == 0:
-            return empty
-        rk, counts = np.unique(good // MAXPOS, return_counts=True)
-        return pd.DataFrame({
-            "query_id": np.int32(qid),
-            "docid": uniq[rk],
-            "n_anchors": counts.astype(np.int64)})
-
-    return (occ.groupBy("query_id", "part")
-            .applyInPandas(lambda pdf: verify(pdf), out_schema))
+    meta, tokenize = _positional_meta(layout_dir, allow_stale)
+    rows, _, plans, cand_by_qid = _positional_prologue(
+        spark, layout_dir, meta, _near_n_plans(tokenize, queries), gate_cap)
+    return _verify_slots(spark, rows, plans, cand_by_qid, n_parts,
+                         near_n_slots(k, ordered), "n_anchors")
 
 
 def near_match(
@@ -1994,65 +1911,15 @@ def near_match(
     (which counts occurrence PAIRS within token distance ≤ k, not
     anchors). Each query is (qid, term_a, term_b); terms must analyze to
     one distinct token each. Same scale shape as :func:`phrase_match`."""
-    from ..analyzer import get_analyzer
+    from .phrase import _near_pair
 
-    meta = _load_meta(layout_dir)
-    _check_positional_layout(meta)
-    _check_stale(meta, allow_stale)
-    tokenize = get_analyzer(meta["analyzer"]).py_tokenize
-    plans_all = []
-    for qid, term_a, term_b in queries:
-        ta = (tokenize(term_a) or [""])[0]
-        tb = (tokenize(term_b) or [""])[0]
-        if not ta or not tb or ta == tb:
-            raise ValueError(
-                "NEAR needs two distinct non-empty analyzed terms"
-            )
-        plans_all.append((int(qid), [ta, tb]))
-    rows, df_by_term, plans, cand_by_qid = _positional_prologue(
-        spark, layout_dir, meta, plans_all, gate_cap
-    )
-    out_schema = "query_id int, docid long, n_pairs long"
-    if not plans:
-        return local_frame(spark, [], out_schema)
-    subs_by_term: dict[str, list[tuple[int, int]]] = {}
-    for qid, ts in plans:
-        for role, t in enumerate(ts):
-            subs_by_term.setdefault(t, []).append((qid, role))
-    occ = _occurrence_rows(spark, rows, subs_by_term, cand_by_qid,
-                           n_parts or _default_parts(spark))
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "query_id": pd.Series([], dtype="int32"),
-            "docid": pd.Series([], dtype="int64"),
-            "n_pairs": pd.Series([], dtype="int64")})
-        if pdf.empty:
-            return empty
-        qid = int(pdf["query_id"].iloc[0])
-        uniq, ranks, slots, pos = _slot_keys(pdf)
-        m_a = slots == 0
-        ranks_a, pos_a = ranks[m_a], pos[m_a]
-        keys_a = ranks_a * MAXPOS + pos_a
-        keys_b = np.sort(ranks[~m_a] * MAXPOS + pos[~m_a])
-        # per a-occurrence: b-occurrences in the same doc within ±k
-        # (window clamped inside the doc's key range — phrase.py math)
-        base = ranks_a * MAXPOS
-        lo = np.maximum(keys_a - k, base)
-        hi = np.minimum(keys_a + k, base + MAXPOS - 1)
-        counts = (np.searchsorted(keys_b, hi, side="right")
-                  - np.searchsorted(keys_b, lo, side="left"))
-        n_pairs = np.bincount(ranks_a, weights=counts, minlength=len(uniq))
-        nz = np.nonzero(n_pairs)[0]
-        if len(nz) == 0:
-            return empty
-        return pd.DataFrame({
-            "query_id": np.int32(qid),
-            "docid": uniq[nz],
-            "n_pairs": n_pairs[nz].astype(np.int64)})
-
-    return (occ.groupBy("query_id", "part")
-            .applyInPandas(lambda pdf: verify(pdf), out_schema))
+    meta, tokenize = _positional_meta(layout_dir, allow_stale)
+    plans_all = [(int(qid), _near_pair(tokenize, a, b))
+                 for qid, a, b in queries]
+    rows, _, plans, cand_by_qid = _positional_prologue(
+        spark, layout_dir, meta, plans_all, gate_cap)
+    return _verify_slots(spark, rows, plans, cand_by_qid, n_parts,
+                         near_slots(k), "n_pairs")
 
 
 def phrase_topk(
@@ -2076,30 +1943,25 @@ def phrase_topk(
     the (query, docid)-keyed join with the verified matches keeps scored
     rows only for docs that truly contain the phrase. Both sides of that
     join are candidate-bounded."""
-    from ..analyzer import get_analyzer
+    from .phrase import _phrase_plans
     from .wand import _idf
 
-    meta = _load_meta(layout_dir)
-    _check_positional_layout(meta)
+    meta, tokenize = _positional_meta(layout_dir, allow_stale)
     if not meta.get("has_doclens"):
         raise ValueError("ranked phrase serving needs a doclen-carrying "
                          "layout")
-    _check_stale(meta, allow_stale)
     n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-    tokenize = get_analyzer(meta["analyzer"]).py_tokenize
-    plans_all = [(int(qid), tokenize(text)) for qid, text in queries]
-    if any(not ts for _, ts in plans_all):
-        raise ValueError("empty phrase after analysis")
     # ONE prologue (pruned scan + metadata/gate probe) shared by the
-    # phrase verify AND the scoring pass — the verify used to re-probe
+    # phrase verify AND the scoring pass
     rows, df_by_term, plans, cand_by_qid = _positional_prologue(
-        spark, layout_dir, meta, plans_all, gate_cap
+        spark, layout_dir, meta, _phrase_plans(tokenize, queries), gate_cap
     )
     if not plans:
         return local_frame(
             spark, [], "query_id int, rank int, docid long, score double"
         )
-    matched = _phrase_match_core(spark, rows, plans, cand_by_qid, n_parts)
+    matched = _verify_slots(spark, rows, plans, cand_by_qid, n_parts,
+                            phrase_slots, "n_occurrences")
     idf_by_term = {t: _idf(n_docs, d) for t, d in df_by_term.items()}
     qids_by_term: dict[str, list[int]] = {}
     restrict: set[tuple[int, str]] = set()

@@ -79,6 +79,21 @@ def _doc_meta(docs_rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return all_ids, all_lens
 
 
+def _local_topk(ids: np.ndarray, scores: np.ndarray, k: int,
+                round_to: int | None, cap: int):
+    """A shard's top-k emission → (ids, raw scores). It must use the SAME
+    ordering as the global merge: (rounded score desc, docid asc). Every
+    doc whose rounded score ties the k-th largest rounded value is kept —
+    rounding is monotone, so docs below that bar can never enter the
+    global top-k — and at most ``cap`` are emitted."""
+    rounded = np.round(scores, round_to) if round_to is not None else scores
+    if len(ids) > k:
+        sel = rounded >= np.partition(rounded, -k)[-k]
+        ids, scores, rounded = ids[sel], scores[sel], rounded[sel]
+    order = np.lexsort((ids, -rounded))[:cap]
+    return ids[order], scores[order]
+
+
 def _score_shard(
     pdf: pd.DataFrame,
     qplans: list[tuple[int, list[tuple[str, float]]]],
@@ -226,21 +241,10 @@ def _score_shard(
                 cand_ids, cand_scores = cand_ids[keep], cand_scores[keep]
         if len(cand_ids) == 0:
             continue
-        # local emission must use the SAME ordering as the global merge:
-        # (rounded score desc, docid asc). Emit every doc whose rounded
-        # score ties the k-th largest rounded value — rounding is monotone,
-        # so docs below that bar can never enter the global top-k.
-        rounded = np.round(cand_scores, round_to) if round_to is not None else cand_scores
-        if len(cand_ids) > k:
-            bar = np.partition(rounded, -k)[-k]
-            sel_mask = rounded >= bar
-        else:
-            sel_mask = np.ones(len(cand_ids), dtype=bool)
-        ids_e, raw_e, rnd_e = cand_ids[sel_mask], cand_scores[sel_mask], rounded[sel_mask]
-        order_e = np.lexsort((ids_e, -rnd_e))[:cap]
-        out_q.extend([qid] * len(order_e))
-        out_d.extend(ids_e[order_e].tolist())
-        out_s.extend(raw_e[order_e].tolist())
+        ids_e, raw_e = _local_topk(cand_ids, cand_scores, k, round_to, cap)
+        out_q.extend([qid] * len(ids_e))
+        out_d.extend(ids_e.tolist())
+        out_s.extend(raw_e.tolist())
     return pd.DataFrame(
         {
             "query_id": pd.Series(out_q, dtype="int32"),
@@ -408,17 +412,10 @@ def _score_shard_and(
                 pos = np.searchsorted(all_ids, ids[ok])
                 contrib = idf * (tfs[ok] * (K1 + 1.0)) / (tfs[ok] + norm_by_doc[pos])
                 scores[hit[ok]] += contrib
-        rounded = np.round(scores, round_to) if round_to is not None else scores
-        if len(cand) > k:
-            bar = np.partition(rounded, -k)[-k]
-            sel = rounded >= bar
-        else:
-            sel = np.ones(len(cand), dtype=bool)
-        ids_e, raw_e, rnd_e = cand[sel], scores[sel], rounded[sel]
-        order_e = np.lexsort((ids_e, -rnd_e))[:cap]
-        out_q.extend([qid] * len(order_e))
-        out_d.extend(ids_e[order_e].tolist())
-        out_s.extend(raw_e[order_e].tolist())
+        ids_e, raw_e = _local_topk(cand, scores, k, round_to, cap)
+        out_q.extend([qid] * len(ids_e))
+        out_d.extend(ids_e.tolist())
+        out_s.extend(raw_e.tolist())
     return pd.DataFrame(
         {
             "query_id": pd.Series(out_q, dtype="int32"),

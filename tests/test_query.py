@@ -635,3 +635,25 @@ def test_cold_search_tasks_follow_bytes_not_buckets(spark, served):
         Q.search(spark, lay, " OR ".join(words), k=10)))
     assert one and many
     assert t_many <= t_one
+
+
+def test_positional_plan_shape_pins(spark, served):
+    """Spark jobs and tasks of the positional serving paths, pinned at
+    their measured values: a cold phrase query.search, a cold NEAR
+    query.search and a 3-query termindex.phrase_match batch each run one
+    job of one task (the pruned scan, the occurrence shuffle and the
+    verify fit one task on this corpus)."""
+    lay, _ = served
+    calls = {
+        "phrase": lambda: _ranked(Q.search(
+            spark, lay, '"key order" AND customer', k=10)),
+        "near": lambda: _ranked(Q.search(
+            spark, lay, '"key order value"~3 AND customer', k=10)),
+        "phrase_match batch": lambda: termindex.phrase_match(
+            spark, lay, [(0, "key order"), (1, "order value"),
+                         (2, "customer filter")]).collect(),
+    }
+    for name, call in calls.items():
+        rows, n_jobs, n_tasks = _job_tasks(spark, call)
+        assert rows, name
+        assert (n_jobs, n_tasks) == (1, 1), name
