@@ -204,28 +204,30 @@ def _phrase_scored_shard(
     k: int, round_to: int | None, cap: int,
 ) -> pd.DataFrame:
     """One shard → phrase-matching docs scored by BM25 over the phrase's
-    distinct terms (exact tf/doclen from the already-decoded blocks), with
-    per-shard emission using the engine's rounded-bar + (score desc, docid
-    asc) pinning — the same contract as wand._score_shard."""
+    distinct terms, with per-shard emission using the engine's
+    rounded-bar + (score desc, docid asc) pinning — the same contract as
+    wand._score_shard. A term's tf in a matched doc is its occurrence
+    count there, taken from the match's own decode (one position decode
+    per distinct term); doclens come from the shard's doc tables."""
     from .. import B, K1
     from .wand import _doc_meta, _local_topk
 
-    matched = _phrase_shard(pdf, terms)
-    if matched.empty:
+    got = _candidate_slots(pdf, terms)
+    if got is None:
         return _empty_frame("docid long, score double")
-    cand = matched["docid"].to_numpy(dtype=np.int64)  # sorted (common order)
-    dels = DelIndex.from_pdf(pdf)
-    per_term, _ = _term_handles(pdf)
+    common, slots = got
+    hits, _ = phrase_slots(slots)
+    if len(hits) == 0:
+        return _empty_frame("docid long, score double")
+    cand = common[hits].astype(np.int64)
     all_ids, all_lens = _doc_meta(pdf[pdf["kind"] == "docs"])
-    norm = K1 * (1.0 - B + B * all_lens.astype(np.float64) / avgdl)
+    dl = all_lens[np.searchsorted(all_ids, cand)].astype(np.float64)
+    norm = K1 * (1.0 - B + B * dl / avgdl)
     scores = np.zeros(len(cand))
     for t in sorted(set(terms)):
-        idf = qweights[t]
-        ids, tfs, _ = _term_positions(per_term[t], cand, dels)
-        hit = np.searchsorted(cand, ids)
-        ok = (hit < len(cand)) & (cand[np.minimum(hit, len(cand) - 1)] == ids)
-        pos = np.searchsorted(all_ids, ids[ok])
-        scores[hit[ok]] += idf * (tfs[ok] * (K1 + 1.0)) / (tfs[ok] + norm[pos])
+        ranks = slots[terms.index(t)][0]
+        tfs = np.bincount(ranks, minlength=len(common))[hits]
+        scores += qweights[t] * (tfs * (K1 + 1.0)) / (tfs + norm)
     ids_e, raw_e = _local_topk(cand, scores, k, round_to, cap)
     return pd.DataFrame({"docid": ids_e, "score": raw_e})
 

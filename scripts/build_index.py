@@ -68,9 +68,10 @@ def main(argv=None):
     ap.add_argument("--n-buckets", type=int, default=64,
                     help="term-layout: number of term-hash partitions")
     ap.add_argument("--refresh-layout", default=None,
-                    help="with --term-layout-from: fold only the DELTA "
-                         "generations into this existing layout snapshot "
-                         "(byte-identical to a full rebuild, delta cost)")
+                    help="with --term-layout-from: bring this existing "
+                         "layout snapshot up to date as a new layout at "
+                         "--out (a rebuild at its bucket count and "
+                         "positions setting; the old one stays readable)")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession

@@ -15,6 +15,9 @@ sys.path.insert(0, "/root/repo/scripts")
 import build_index as build_cli  # noqa: E402
 import query as query_cli  # noqa: E402
 
+from gazetteer_spark.analyzer import get_analyzer  # noqa: E402
+from gazetteer_spark.index import termindex  # noqa: E402
+
 
 @pytest.fixture(scope="module")
 def cli_env(spark, documents, tmp_path_factory):
@@ -152,6 +155,38 @@ def test_cli_term_layout_and_edit_fuzzy(spark, documents, cli_env, capsys):
         "--query", "windoww", "--max-edits", "1",
     ])
     assert got["mode"] == "fuzzy-edit" and got["results"]["0"]
+
+    # add documents, then --refresh-layout the snapshot into a new dir:
+    # the new layout serves the added docs, the old one stays readable
+    # as a stale snapshot
+    add_src = str(work / "src_add")
+    documents.join(spark.read.parquet(src).select("doc_id"), "doc_id",
+                   "left_anti").limit(40).write.parquet(add_src)
+    added = spark.read.parquet(add_src).orderBy("doc_id").first()
+    _run(capsys, build_cli.main, [
+        "--source", add_src, "--out", idx, "--add",
+        "--docid-col", "doc_id", "--content-col", "text",
+    ])
+    lay1 = str(work / "tl_refreshed")
+    out = _run(capsys, build_cli.main, [
+        "--term-layout-from", idx, "--refresh-layout", lay, "--out", lay1,
+    ])
+    assert out["term_layout"] == lay1
+    term = get_analyzer("default").py_tokenize(added["text"])[0]
+
+    def docids(layout, **kw):
+        return {r["docid"] for r in termindex.term_postings(
+            spark, layout, [term], **kw).collect()}
+
+    assert added["doc_id"] in docids(lay1)
+    assert added["doc_id"] not in docids(lay, allow_stale=True)
+    with pytest.raises(ValueError, match="STALE"):
+        docids(lay)
+    got = _run(capsys, query_cli.main, [
+        "--index", idx, "--mode", "layout-bm25", "--term-layout", lay1,
+        "--query", "spark join", "--k", "5",
+    ])
+    assert got["results"]["0"]
 
 
 def test_cli_fielded_term_layout_bm25f(spark, documents, cli_env, capsys):

@@ -452,6 +452,37 @@ def test_phrase_topk_ranked(spark, documents, pos_index):
     assert got == want and got
 
 
+def test_phrase_scorer_decodes_each_term_once(spark, pos_index,
+                                             monkeypatch):
+    """The ranked phrase scorer takes each term's tf from the match's own
+    position decode: one _term_positions call per distinct phrase term
+    in a shard that scores docs, never a second pass over its rows."""
+    from gazetteer_spark.index.spimi import committed_segments, load_stats
+
+    terms = ["key", "order"]
+    pdf = committed_segments(spark, pos_index).filter(
+        ((F.col("kind") == "post") & F.col("term").isin(terms))
+        | F.col("kind").isin(["docs", "dels"])).toPandas()
+    calls = []
+    real = phrase._term_positions
+
+    def counted(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(phrase, "_term_positions", counted)
+    avgdl = load_stats(pos_index)["avgdl"]
+    scored = 0
+    for _, shard in pdf.groupby("shard"):
+        calls.clear()
+        out = phrase._phrase_scored_shard(
+            shard, terms, {"key": 1.5, "order": 0.7}, avgdl, 10, 4, 4096)
+        if len(out):
+            scored += 1
+            assert len(calls) == len(terms)
+    assert scored
+
+
 def test_phrase_topk_absent_term_empty(spark, pos_index):
     assert phrase.phrase_topk(spark, pos_index, "key zzz_never").count() == 0
 

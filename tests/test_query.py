@@ -657,3 +657,34 @@ def test_positional_plan_shape_pins(spark, served):
         rows, n_jobs, n_tasks = _job_tasks(spark, call)
         assert rows, name
         assert (n_jobs, n_tasks) == (1, 1), name
+
+
+def test_refresh_runs_the_jobs_of_a_build(spark, documents,
+                                          tmp_path_factory):
+    """A layout refresh is a rebuild: at the same snapshot it runs
+    exactly the Spark jobs of build_term_layout, after an adds-only delta
+    and after a delta with deletes (no delta probe, no affected-bucket
+    job)."""
+    idx = str(tmp_path_factory.mktemp("idx_refresh_jobs"))
+    spimi.build_index(spark, documents.filter(F.col("doc_id") < 300), idx,
+                      n_shards=4, id_col="doc_id", content_col="text",
+                      positions=True, doclens=True)
+    lay = str(tmp_path_factory.mktemp("lay_refresh_jobs"))
+    termindex.build_term_layout(spark, idx, lay, n_buckets=8,
+                                positions=True)
+    deltas = [
+        lambda: spimi.add_documents(
+            spark, documents.filter(F.col("doc_id") >= 300), idx,
+            id_col="doc_id", content_col="text"),
+        lambda: spimi.delete_documents(spark, [3, 30, 301], idx),
+    ]
+    for i, delta in enumerate(deltas):
+        delta()
+        new = str(tmp_path_factory.mktemp(f"lay_refresh_jobs{i}"))
+        _, refresh_jobs = _jobs(spark, lambda: (
+            termindex.refresh_term_layout(spark, idx, lay, new)))
+        _, build_jobs = _jobs(spark, lambda: (
+            termindex.build_term_layout(
+                spark, idx, new + "_rebuilt", n_buckets=8, positions=True)))
+        assert refresh_jobs == build_jobs > 0, i
+        lay = new

@@ -28,6 +28,24 @@ def layout(spark, primary, tmp_path_factory):
     return d
 
 
+def _layout_state(spark, d):
+    """A layout's merged rows (every stream) and its layout.json.
+    ``source_index`` comes back resolved (_load_meta): it is stored
+    relative to each layout dir, so two dirs over one index store
+    different strings for the same source."""
+    rows = sorted(
+        (r["term"], r["df"], r["cf"], bytes(r["postings"]),
+         bytes(r["blockmeta"]), bytes(r["doclens"]), bytes(r["positions"]))
+        for r in spark.read.parquet(f"{d}/terms").collect()
+    )
+    return rows, termindex._load_meta(d)
+
+
+def _assert_refresh_is_rebuild(spark, refreshed, rebuilt):
+    got = _layout_state(spark, refreshed)
+    assert got == _layout_state(spark, rebuilt) and got[0]
+
+
 def test_term_postings_match_scan(spark, documents, layout):
     terms = ["customer", "filter", "group", "spark"]
     got = {(r["term"], r["docid"]): r["tf"] for r in
@@ -402,121 +420,57 @@ def test_bm25_layout_excludes_tombstoned(spark, documents, tmp_path_factory):
 
 def test_layout_refresh_matches_full_rebuild(spark, documents,
                                              tmp_path_factory):
-    """refresh_term_layout folding delta generations (adds + deletes) into
-    an existing snapshot must be BYTE-identical to a from-scratch rebuild
-    at the new snapshot — and dels-only generations now stale the layout
-    (they have no read-time mask here, unlike the fuzzy fan-in)."""
+    """refresh_term_layout after delta generations — an adds-only delta,
+    then adds + deletes — must be BYTE-identical, layout.json included,
+    to a from-scratch rebuild at the new snapshot; dels-only generations
+    stale the layout (they have no read-time mask here, unlike the fuzzy
+    fan-in)."""
     idx = str(tmp_path_factory.mktemp("idx_refresh"))
     spimi.build_index(spark, documents.filter(F.col("doc_id") < 300), idx,
                       n_shards=4, id_col="doc_id", content_col="text")
     lay0 = str(tmp_path_factory.mktemp("lay_refresh0"))
     termindex.build_term_layout(spark, idx, lay0, n_buckets=8)
 
+    # adds-only delta
+    spimi.add_documents(spark, documents.filter(
+        (F.col("doc_id") >= 300) & (F.col("doc_id") < 400)), idx,
+        id_col="doc_id", content_col="text")
+    lay1 = str(tmp_path_factory.mktemp("lay_refresh1"))
+    termindex.refresh_term_layout(spark, idx, lay0, lay1)
+    reb1 = str(tmp_path_factory.mktemp("lay_rebuild1"))
+    termindex.build_term_layout(spark, idx, reb1, n_buckets=8)
+    _assert_refresh_is_rebuild(spark, lay1, reb1)
+
     # delta: one add generation + one dels-only generation
-    spimi.add_documents(spark, documents.filter(F.col("doc_id") >= 300), idx,
+    spimi.add_documents(spark, documents.filter(F.col("doc_id") >= 400), idx,
                         id_col="doc_id", content_col="text")
     victims = [r["docid"] for r in
-               termindex.term_postings(spark, lay0, ["customer"],
+               termindex.term_postings(spark, lay1, ["customer"],
                                        allow_stale=True)
                .select("docid").limit(3).collect()]
     spimi.delete_documents(spark, victims, idx)
 
     # the dels-only generation STALES the layout for every reader
     with pytest.raises(ValueError, match="STALE"):
-        termindex.term_postings(spark, lay0, ["customer"]).collect()
+        termindex.term_postings(spark, lay1, ["customer"]).collect()
     with pytest.raises(ValueError, match="STALE"):
-        termindex.boolean_and(spark, lay0, "customer filter")
+        termindex.boolean_and(spark, lay1, "customer filter")
 
-    lay1 = str(tmp_path_factory.mktemp("lay_refresh1"))
-    termindex.refresh_term_layout(spark, idx, lay0, lay1)
     lay2 = str(tmp_path_factory.mktemp("lay_refresh2"))
-    termindex.build_term_layout(spark, idx, lay2, n_buckets=8)
-
-    def snapshot(d):
-        return sorted(
-            (r["term"], r["df"], r["cf"], bytes(r["postings"]),
-             bytes(r["blockmeta"]), bytes(r["doclens"]))
-            for r in spark.read.parquet(f"{d}/terms").collect()
-        )
-
-    assert snapshot(lay1) == snapshot(lay2) and snapshot(lay1)
+    termindex.refresh_term_layout(spark, idx, lay1, lay2)
+    reb2 = str(tmp_path_factory.mktemp("lay_rebuild2"))
+    termindex.build_term_layout(spark, idx, reb2, n_buckets=8)
+    _assert_refresh_is_rebuild(spark, lay2, reb2)
     # refreshed snapshot serves: victims gone, added docs present
     got = {r["docid"] for r in
-           termindex.term_postings(spark, lay1, ["customer"]).collect()}
+           termindex.term_postings(spark, lay2, ["customer"]).collect()}
     assert got and not (got & set(victims))
-    assert any(d >= 300 for d in
+    assert any(d >= 400 for d in
                {r["docid"] for r in
-                termindex.term_postings(spark, lay1, ["the"]).collect()})
+                termindex.term_postings(spark, lay2, ["the"]).collect()})
     # refreshing a current layout is a loud no-op
     with pytest.raises(ValueError, match="already current"):
-        termindex.refresh_term_layout(spark, idx, lay1, lay2 + "_x")
-
-
-def test_layout_refresh_adds_only_copies_untouched_buckets(
-    spark, tmp_path_factory
-):
-    """An adds-only delta re-merges ONLY the delta terms' buckets;
-    untouched bucket partitions are verbatim file-level copies of the old
-    snapshot (same file names, same bytes — a re-merge always writes new
-    part files), and the refreshed layout equals a full rebuild
-    byte-for-byte."""
-    import os as _os
-
-    docs1 = spark.createDataFrame(
-        [(i, f"alpha beta w{i % 5}") for i in range(60)],
-        "doc_id long, text string",
-    )
-    docs2 = spark.createDataFrame(
-        [(100 + i, f"alpha gamma w{i % 5}") for i in range(30)],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path_factory.mktemp("idx_addsonly"))
-    spimi.build_index(spark, docs1, idx, n_shards=2,
-                      id_col="doc_id", content_col="text")
-    lay0 = str(tmp_path_factory.mktemp("lay_addsonly0"))
-    termindex.build_term_layout(spark, idx, lay0, n_buckets=32)
-    spimi.add_documents(spark, docs2, idx, id_col="doc_id",
-                        content_col="text")
-    lay1 = str(tmp_path_factory.mktemp("lay_addsonly1"))
-    termindex.refresh_term_layout(spark, idx, lay0, lay1)
-
-    delta_terms = ["alpha", "gamma", "w0", "w1", "w2", "w3", "w4"]
-    affected = set(termindex._buckets_for(spark, delta_terms, 32))
-    beta_bucket = termindex._buckets_for(spark, ["beta"], 32)[0]
-    assert beta_bucket not in affected  # deterministic for this vocab
-
-    checked_copy = checked_remerge = False
-    for name in sorted(_os.listdir(f"{lay0}/terms")):
-        if not name.startswith("bucket="):
-            continue
-        b = int(name.split("=", 1)[1])
-        files0 = sorted(f for f in _os.listdir(f"{lay0}/terms/{name}")
-                        if f.endswith(".parquet"))
-        files1 = sorted(f for f in _os.listdir(f"{lay1}/terms/{name}")
-                        if f.endswith(".parquet"))
-        if b not in affected:
-            assert files0 == files1, name  # verbatim copy
-            for f in files0:
-                with open(f"{lay0}/terms/{name}/{f}", "rb") as a, \
-                        open(f"{lay1}/terms/{name}/{f}", "rb") as c:
-                    assert a.read() == c.read()
-            checked_copy = True
-        else:
-            assert files0 != files1, name  # freshly written part files
-            checked_remerge = True
-    assert checked_copy and checked_remerge
-
-    lay2 = str(tmp_path_factory.mktemp("lay_addsonly2"))
-    termindex.build_term_layout(spark, idx, lay2, n_buckets=32)
-
-    def snapshot(d):
-        return sorted(
-            (r["term"], r["df"], r["cf"], bytes(r["postings"]),
-             bytes(r["blockmeta"]), bytes(r["doclens"]))
-            for r in spark.read.parquet(f"{d}/terms").collect()
-        )
-
-    assert snapshot(lay1) == snapshot(lay2) and snapshot(lay1)
+        termindex.refresh_term_layout(spark, idx, lay2, reb2 + "_x")
 
 
 def test_partial_layout_invisible(spark, documents, tmp_path_factory):
@@ -571,14 +525,8 @@ def test_layout_v3_source_skips_resolve_and_is_identical(
     lay3 = str(tmp_path_factory.mktemp("lay_v3src"))
     termindex.build_term_layout(spark, idx3, lay3, n_buckets=8)
 
-    def snapshot(d):
-        return sorted(
-            (r["term"], r["df"], r["cf"], bytes(r["postings"]),
-             bytes(r["blockmeta"]), bytes(r["doclens"]))
-            for r in spark.read.parquet(f"{d}/terms").collect()
-        )
-
-    assert snapshot(lay2) == snapshot(lay3) and snapshot(lay2)
+    rows2 = _layout_state(spark, lay2)[0]
+    assert rows2 == _layout_state(spark, lay3)[0] and rows2
 
     queries = [(0, "spark join merge"), (1, "the"), (2, "customer filter")]
     rows_of = lambda df: [  # noqa: E731
@@ -622,14 +570,7 @@ def test_layout_v3_refresh_and_compact(spark, documents, tmp_path_factory,
     lay2 = str(tmp_path_factory.mktemp("lay_v3ref2"))
     termindex.build_term_layout(spark, idx, lay2, n_buckets=8)
 
-    def snapshot(d):
-        return sorted(
-            (r["term"], r["df"], r["cf"], bytes(r["postings"]),
-             bytes(r["blockmeta"]), bytes(r["doclens"]))
-            for r in spark.read.parquet(f"{d}/terms").collect()
-        )
-
-    assert snapshot(lay1) == snapshot(lay2) and snapshot(lay1)
+    _assert_refresh_is_rebuild(spark, lay1, lay2)
     got = {r["docid"] for r in
            termindex.term_postings(spark, lay1, ["customer"]).collect()}
     assert got and not (got & set(victims))
@@ -810,9 +751,8 @@ def test_fielded_layout_guards(spark, documents, fielded_v3, layout,
 def test_fielded_layout_refresh_matches_rebuild(spark, documents,
                                                 tmp_path_factory):
     """refresh_term_layout over a FIELDED v3 source (adds + dels delta)
-    stays byte-identical to a from-scratch rebuild, keeps base-term
-    bucketing for delta rows, and the refreshed snapshot never ranks
-    tombstoned docs."""
+    stays byte-identical to a from-scratch rebuild, and the refreshed
+    snapshot never ranks tombstoned docs."""
     from gazetteer_spark import fielded
 
     fidx = str(tmp_path_factory.mktemp("fidx_ref3"))
@@ -836,14 +776,7 @@ def test_fielded_layout_refresh_matches_rebuild(spark, documents,
     lay2 = str(tmp_path_factory.mktemp("flay_ref2"))
     termindex.build_term_layout(spark, fidx, lay2, n_buckets=16)
 
-    def snapshot(d):
-        return sorted(
-            (r["term"], r["df"], r["cf"], bytes(r["postings"]),
-             bytes(r["blockmeta"]), bytes(r["doclens"]))
-            for r in spark.read.parquet(f"{d}/terms").collect()
-        )
-
-    assert snapshot(lay1) == snapshot(lay2) and snapshot(lay1)
+    _assert_refresh_is_rebuild(spark, lay1, lay2)
     after = {r["docid"] for r in
              termindex.bm25f_topk(spark, lay1, [(0, "customer filter")],
                                   boosts=FL_BOOSTS, k=10).collect()}
@@ -1137,15 +1070,7 @@ def test_positional_layout_refresh_byte_identical(spark, documents,
     termindex.build_term_layout(spark, idx, lay2, n_buckets=8,
                                 positions=True)
 
-    def snapshot(d):
-        return sorted(
-            (r["term"], r["df"], r["cf"], bytes(r["postings"]),
-             bytes(r["blockmeta"]), bytes(r["doclens"]),
-             bytes(r["positions"]))
-            for r in spark.read.parquet(f"{d}/terms").collect()
-        )
-
-    assert snapshot(lay1) == snapshot(lay2) and snapshot(lay1)
+    _assert_refresh_is_rebuild(spark, lay1, lay2)
     got = _match_rows(
         termindex.phrase_match(spark, lay1, [(0, "key order")]),
         "n_occurrences")
@@ -1378,19 +1303,21 @@ def test_merge_bucket_dels_mask_only_older_generations(with_positions):
 
 
 @pytest.mark.parametrize("with_positions", [False, True])
-def test_merge_bucket_refresh_rows(with_positions):
-    """Refresh input: existing merged layout rows labelled with the
-    layout's max_source_gen (3), plus a delta of adds, a re-add and a
-    del that masks some existing postings."""
+def test_merge_bucket_multi_gen_dels_and_same_gen_readd(with_positions):
+    """Multi-generation stream rows under a later del: the del masks
+    postings of every older generation, and a re-add in the del's own
+    generation survives it."""
     rows = [
-        _post("alpha", 3, [1, 4, 8, 2**36]),     # existing layout rows
+        _post("alpha", 3, [1, 4, 8, 2**36]),
         _post("beta", 3, list(range(0, 300, 3))),
         _post("alpha", 4, [2, 9]),
         _table("dels", 5, [4, 9, 30]),
         _post("beta", 5, [30]),                   # re-add in the del's gen
         _post("delta", 5, [3]),
     ]
-    _assert_merge_matches(rows, True, with_positions)
+    got = _assert_merge_matches(rows, True, with_positions)
+    ids, _ = codec.decode_postings(got["postings"][0])
+    assert ids.tolist() == [1, 2, 8, 2**36]
 
 
 @pytest.mark.parametrize("with_positions", [False, True])
