@@ -75,6 +75,34 @@ def tfnorm_expr(tf_col, doclen_col, avgdl_col, k1: float = K1, b: float = B):
     )
 
 
+def bm25f_weight_expr(boost_col, tf_col, flen_col, avglen_col):
+    """Column twin of ``scoring.bm25f_weight``: one field's boost-weighted,
+    length-normalized tf."""
+    return boost_col * tf_col / (1.0 - B + B * flen_col / avglen_col)
+
+
+def bm25f_contrib_expr(idf_col, tfw_col):
+    """Column twin of ``scoring.bm25f_contrib``."""
+    return idf_col * tfw_col / (K1 + tfw_col)
+
+
+def rank_topk(scored: DataFrame, k: int, round_to: int | None) -> DataFrame:
+    """(query_id, rank, docid, score) from (query_id, docid, score): the
+    engine's rank contract — scores rounded to ``round_to`` dp, ranked per
+    query by (score desc, docid asc), the first ``k`` kept (a
+    group-limited window, WindowGroupLimit in the plan)."""
+    score = (F.round(F.col("score"), round_to) if round_to is not None
+             else F.col("score"))
+    win = W.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("docid").asc())
+    return (
+        scored.select("query_id", "docid", score.alias("score"))
+        .withColumn("rank", F.row_number().over(win))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "docid", "score")
+    )
+
+
 def score_queries(
     spark: SparkSession,
     postings: DataFrame,
@@ -146,14 +174,6 @@ def score_queries(
                 F.lit(avgdl).cast("double"))).alias("part"),
         )
     )
-    scored = contrib.groupBy("query_id", "docid").agg(F.sum("part").alias("score_raw"))
-    score = (
-        F.round(F.col("score_raw"), round_to) if round_to is not None else F.col("score_raw")
-    )
-    scored = scored.select("query_id", "docid", score.alias("score"))
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("docid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return rank_topk(
+        contrib.groupBy("query_id", "docid").agg(F.sum("part").alias("score")),
+        k, round_to)

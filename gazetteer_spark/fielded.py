@@ -51,10 +51,23 @@ from .analyzer import (
     postings_positions_arrow,
     postings_sql,
 )
+from .bm25 import (
+    bm25f_contrib_expr,
+    bm25f_weight_expr,
+    idf_expr,
+    rank_topk,
+)
 from .index import spimi
 from .index.codec import DelIndex, decode_postings
+from .index.phrase import _emission_frame
+from .index.scoring import (
+    bm25f_contrib,
+    bm25f_weight,
+    idf,
+    local_topk,
+    rank_margin,
+)
 from .index.spimi import FIELD_SEP
-from .index.wand import _idf, _local_topk
 from .session import local_frame
 
 DEFAULT_BOOST = 1.0
@@ -128,35 +141,26 @@ def bm25f_topk(
         fp.join(F.broadcast(qdf.select("term").distinct()), "term", "left_semi")
         .groupBy("term").agg(F.countDistinct("docid").alias("df"))
     )
-    idf = dft.crossJoin(F.broadcast(nd)).select(
-        "term",
-        F.log(1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        .alias("idf"),
+    idfs = dft.crossJoin(F.broadcast(nd)).select(
+        "term", idf_expr(F.col("df"), F.col("n")).alias("idf"),
     )
     w = (
         fp.join(F.broadcast(qdf), "term")
         .join(flen, ["docid", "field"])
         .join(F.broadcast(avgl), "field")
-        .withColumn(
-            "w",
-            _boost_expr(boosts) * F.col("tf")
-            / (1.0 - B + B * F.col("flen") / F.col("avglen")),
-        )
+        .withColumn("w", bm25f_weight_expr(
+            _boost_expr(boosts), F.col("tf"), F.col("flen"),
+            F.col("avglen")))
         .groupBy("query_id", "docid", "term")
         .agg(F.sum("w").alias("tfw"))
     )
     scored = (
-        w.join(F.broadcast(idf), "term")
+        w.join(F.broadcast(idfs), "term")
         .groupBy("query_id", "docid")
-        .agg(F.sum(F.col("idf") * F.col("tfw") / (K1 + F.col("tfw"))).alias("s"))
+        .agg(F.sum(bm25f_contrib_expr(F.col("idf"), F.col("tfw")))
+             .alias("score"))
     )
-    score = F.round(F.col("s"), round_to) if round_to is not None else F.col("s")
-    win = W.partitionBy("query_id").orderBy(score.desc(), F.col("docid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", score.alias("score"))
-    )
+    return rank_topk(scored, k, round_to)
 
 
 # ---------------------------------------------------------------------------
@@ -334,8 +338,8 @@ def _term_tfw(pdf, term, fields, boosts, avglen, fdocs, dels):
             continue
         f_ids, f_lens = fdocs[f]
         lens = f_lens[np.searchsorted(f_ids, ids)]
-        w = (boosts.get(f, DEFAULT_BOOST) * tfs
-             / (1.0 - B + B * lens.astype(np.float64) / avglen[f]))
+        w = bm25f_weight(boosts.get(f, DEFAULT_BOOST), tfs,
+                         lens.astype(np.float64), avglen[f])
         merged = np.union1d(acc_ids, ids)
         nw = np.zeros(len(merged))
         nw[np.searchsorted(merged, acc_ids)] = acc_w
@@ -390,21 +394,18 @@ def _score_shard_fielded(
       postings — candidates that cannot reach θ even granted their own
       blocks' bound are dropped, then ONLY blocks still holding survivors
       are decoded.
-    - per-(term, field) tfw components are kept separately and summed in
-      FIELDS order at scoring, so float summation matches the exact
-      scorer (_term_tfw) bit-for-bit.
+    - per-(term, field) tfw components (``scoring.bm25f_weight``) are
+      kept separately and summed in FIELDS order at scoring — the order
+      every numpy BM25F scorer sums them in — so scores match the exact
+      scorers bit-for-bit.
     Survivors end with exact BM25F scores by construction; emission uses
     the rounded-bar rule shared with the global merge."""
-    empty = pd.DataFrame(columns=["query_id", "docid", "score"]).astype(
-        {"query_id": "int32", "docid": "int64", "score": "float64"}
-    )
     fdocs = _fdocs_tables(pdf)
     if not fdocs:
-        return empty
+        return _emission_frame([])
     dels = DelIndex.from_pdf(pdf)
 
     from .index.codec import decode_block_meta, decode_blocks
-    from .index.wand import EPS
 
     has_gen = "gen" in pdf.columns
     comp_rows: dict[str, list[tuple[bytes, bytes, int]]] = {}
@@ -437,7 +438,7 @@ def _score_shard_fielded(
                     s.pbuf, s.bends, s.blast, s.gen = pbuf, bends, blast, gen
                     if len(bmax_tf):
                         m = bmax_tf.astype(np.float64)
-                        s.bub = bst * m / (1.0 - B + B * m / avglen[f])
+                        s.bub = bm25f_weight(bst, m, m, avglen[f])
                         fmax = max(fmax, float(s.bub.max()))
                     else:
                         s.bub = np.zeros(0)
@@ -448,9 +449,9 @@ def _score_shard_fielded(
             handles_cache[term] = (out, tub)
         return handles_cache[term]
 
-    margin = (2.0 * 10.0 ** (-round_to) if round_to is not None else 0.0) + EPS
+    margin = rank_margin(round_to)
 
-    out_q, out_d, out_s = [], [], []
+    emitted = []
     for qid, weighted_terms in qplans:
         terms = [(t, idf) for t, idf in weighted_terms if handles_of(t)[0]]
         if not terms:
@@ -471,7 +472,7 @@ def _score_shard_fielded(
                     default=0.0,
                 )
                 units.append((ti, f, bst, segs))
-                uub.append(idf * fmax / (K1 + fmax))
+                uub.append(bm25f_contrib(idf, fmax))
         ubs = np.asarray(uub, dtype=np.float64)
         order = np.argsort(-ubs, kind="stable")
         suffix = np.zeros(len(order) + 1)
@@ -479,8 +480,7 @@ def _score_shard_fielded(
 
         cand_ids = np.zeros(0, np.int64)
         # per-(term, field) tfw components aligned with cand_ids — summed
-        # in FIELDS order at scoring time so float summation matches the
-        # exact scorer (_term_tfw) exactly
+        # in FIELDS order at scoring time, the kernel's tfw order
         comp: dict[tuple[int, str], np.ndarray] = {}
 
         def scores() -> np.ndarray:
@@ -492,7 +492,7 @@ def _score_shard_fielded(
                     if a is not None:
                         tfw = a.copy() if tfw is None else tfw + a
                 if tfw is not None:
-                    s += np.where(tfw > 0, idf * tfw / (K1 + tfw), 0.0)
+                    s += np.where(tfw > 0, bm25f_contrib(idf, tfw), 0.0)
             return s
 
         theta = -np.inf
@@ -508,9 +508,8 @@ def _score_shard_fielded(
                 if len(ids):
                     f_ids, f_lens = fdocs[f]
                     lens = f_lens[np.searchsorted(f_ids, ids)]
-                    w = (bst * tfs
-                         / (1.0 - B + B * lens.astype(np.float64)
-                            / avglen[f]))
+                    w = bm25f_weight(bst, tfs, lens.astype(np.float64),
+                                     avglen[f])
                     merged = np.union1d(cand_ids, ids)
                     if len(merged) != len(cand_ids):
                         old_pos = np.searchsorted(merged, cand_ids)
@@ -535,7 +534,7 @@ def _score_shard_fielded(
                     u[inside] = s.bub[bi[inside]]
                     ub_c = np.maximum(ub_c, u)
                 keep = (
-                    scores() + idf * ub_c / (K1 + ub_c) + rem
+                    scores() + bm25f_contrib(idf, ub_c) + rem
                     >= theta - margin
                 )
                 if not keep.all():
@@ -562,9 +561,8 @@ def _score_shard_fielded(
                     if not ok.any():
                         continue
                     lens = f_lens[np.searchsorted(f_ids, ids[ok])]
-                    w = (bst * tfs[ok]
-                         / (1.0 - B + B * lens.astype(np.float64)
-                            / avglen[f]))
+                    w = bm25f_weight(bst, tfs[ok], lens.astype(np.float64),
+                                     avglen[f])
                     a = comp.setdefault((ti, f), np.zeros(len(cand_ids)))
                     a[hit[ok]] += w
             # θ only grows; prune docs that cannot reach it
@@ -578,17 +576,9 @@ def _score_shard_fielded(
                         comp[key] = comp[key][keep]
         if len(cand_ids) == 0:
             continue
-        ids_e, raw_e = _local_topk(cand_ids, scores(), k, round_to, cap)
-        out_q.extend([qid] * len(ids_e))
-        out_d.extend(ids_e.tolist())
-        out_s.extend(raw_e.tolist())
-    return pd.DataFrame(
-        {
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "docid": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        }
-    )
+        emitted.append(
+            (qid, *local_topk(cand_ids, scores(), k, round_to, cap)))
+    return _emission_frame(emitted)
 
 
 def _relevant_fielded(seg: DataFrame, fields: list[str], terms: list[str]):
@@ -632,7 +622,7 @@ def _fielded_topk_impl(
     n_docs = stats["n_docs"]
     avglen = {f: stats["field_totals"].get(f, 0) / n_docs for f in fields}
     qplans = [
-        (qid, [(t, _idf(n_docs, df_by_term[t])) for t in ts if t in df_by_term])
+        (qid, [(t, idf(n_docs, df_by_term[t])) for t in ts if t in df_by_term])
         for qid, ts in qterms.items()
     ]
     qplans = [(qid, ts) for qid, ts in qplans if ts]
@@ -646,19 +636,7 @@ def _fielded_topk_impl(
         ),
         "query_id int, docid long, score double",
     )
-    score = (
-        F.round(F.col("score"), round_to) if round_to is not None
-        else F.col("score")
-    )
-    scored = local.select("query_id", "docid", score.alias("score"))
-    win = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("docid").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return rank_topk(local, k, round_to)
 
 
 def fielded_topk(
@@ -854,8 +832,8 @@ def _phrase_scored_shard_fielded(
         ids, tfw = _term_tfw(pdf, t, fields, boosts, avglen, fdocs, dels)
         hit = np.searchsorted(cand, ids)
         ok = (hit < len(cand)) & (cand[np.minimum(hit, len(cand) - 1)] == ids)
-        scores[hit[ok]] += idf * tfw[ok] / (K1 + tfw[ok])
-    ids_e, raw_e = _local_topk(cand, scores, k, round_to, cap)
+        scores[hit[ok]] += bm25f_contrib(idf, tfw[ok])
+    ids_e, raw_e = local_topk(cand, scores, k, round_to, cap)
     return pd.DataFrame({"docid": ids_e, "score": raw_e})
 
 
@@ -884,7 +862,7 @@ def fielded_phrase_topk(
     dfs = _df_job(seg, fields, base)
     if any(t not in dfs for t in base):  # conjunctive: absent term → empty
         return local_frame(spark, [], "rank int, docid long, score double")
-    qweights = {t: _idf(n_docs, dfs[t]) for t in base}
+    qweights = {t: idf(n_docs, dfs[t]) for t in base}
     boosts = boosts or {}
     local = _relevant_fielded(seg, fields, base).groupBy("shard").applyInPandas(
         lambda p: _phrase_scored_shard_fielded(

@@ -46,6 +46,7 @@ from .codec import (
     gather_runs,
 )
 from .positional import near_n_slots, near_slots, phrase_slots
+from .scoring import bm25_contrib, bm25_norm, idf, local_topk
 
 _EMPTY = (
     np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0, np.int64)
@@ -209,8 +210,7 @@ def _phrase_scored_shard(
     wand._score_shard. A term's tf in a matched doc is its occurrence
     count there, taken from the match's own decode (one position decode
     per distinct term); doclens come from the shard's doc tables."""
-    from .. import B, K1
-    from .wand import _doc_meta, _local_topk
+    from .wand import _doc_meta
 
     got = _candidate_slots(pdf, terms)
     if got is None:
@@ -222,13 +222,13 @@ def _phrase_scored_shard(
     cand = common[hits].astype(np.int64)
     all_ids, all_lens = _doc_meta(pdf[pdf["kind"] == "docs"])
     dl = all_lens[np.searchsorted(all_ids, cand)].astype(np.float64)
-    norm = K1 * (1.0 - B + B * dl / avgdl)
+    norm = bm25_norm(dl, avgdl)
     scores = np.zeros(len(cand))
     for t in sorted(set(terms)):
         ranks = slots[terms.index(t)][0]
         tfs = np.bincount(ranks, minlength=len(common))[hits]
-        scores += qweights[t] * (tfs * (K1 + 1.0)) / (tfs + norm)
-    ids_e, raw_e = _local_topk(cand, scores, k, round_to, cap)
+        scores += bm25_contrib(qweights[t], tfs, norm)
+    ids_e, raw_e = local_topk(cand, scores, k, round_to, cap)
     return pd.DataFrame({"docid": ids_e, "score": raw_e})
 
 
@@ -240,6 +240,23 @@ def _empty_frame(schema: str) -> pd.DataFrame:
     return pd.DataFrame({
         name: pd.Series([], dtype=_DTYPES[typ])
         for name, typ in (c.split() for c in schema.split(","))})
+
+
+def _emission_frame(
+    emitted: list[tuple[int, np.ndarray, np.ndarray]],
+) -> pd.DataFrame:
+    """(query_id int, docid long, score double): a shard's per-query
+    top-k' emissions ``[(query_id, docids, raw scores)]`` stacked in
+    order — the frame every doc-sharded MaxScore scorer returns."""
+    if not emitted:
+        return _empty_frame("query_id int, docid long, score double")
+    qids, ids, raw = zip(*emitted)
+    return pd.DataFrame({
+        "query_id": np.repeat(np.array(qids, np.int32),
+                              [len(i) for i in ids]),
+        "docid": np.concatenate(ids).astype(np.int64),
+        "score": np.concatenate(raw).astype(np.float64),
+    })
 
 
 def _per_query_shards(rows: DataFrame, plans: list[tuple[int, object]],
@@ -397,8 +414,9 @@ def phrase_topk_batch(
     phrase candidates and their tfs come from the same block-selective
     decode, doclens from the shard's docmeta, df/avgdl from the committed
     stats."""
+    from ..bm25 import rank_topk
     from .spimi import load_stats, load_termstats
-    from .wand import _idf, _lookup_dfs
+    from .wand import _lookup_dfs
 
     params, seg = _positional_segments(spark, index_dir)
     stats = load_stats(index_dir)
@@ -406,7 +424,7 @@ def phrase_topk_batch(
     all_terms = _all_terms(plans)
     termstats = load_termstats(spark, index_dir)
     df_by_term = _lookup_dfs(termstats, all_terms)
-    qweights = {t: _idf(stats["n_docs"], df_by_term[t])
+    qweights = {t: idf(stats["n_docs"], df_by_term[t])
                 for t in all_terms if t in df_by_term}
     # a phrase with an unindexed term matches nothing (conjunctive)
     live = [(qid, ts) for qid, ts in plans
@@ -424,18 +442,7 @@ def phrase_topk_batch(
         lambda pdf, ts: _phrase_scored_shard(
             pdf, ts, qweights, stats["avgdl"], k, round_to, tie_cap),
         "docid long, score double")
-    from pyspark.sql import Window as W
-
-    score = (F.round(F.col("score"), round_to) if round_to is not None
-             else F.col("score"))
-    win = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("docid").asc())
-    return (
-        local.select("query_id", "docid", score.alias("score"))
-        .withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return rank_topk(local, k, round_to)
 
 
 def phrase_topk(

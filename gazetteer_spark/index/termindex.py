@@ -58,17 +58,27 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
-from .. import B, K1
+from ..bm25 import rank_topk
 from ..session import local_frame
 from .codec import (
     DelIndex,
     _varbyte_decode,
+    _varbyte_decode_grouped,
     _varbyte_encode,
     decode_postings,
+    decode_postings_grouped,
 )
 from .positional import near_n_slots, near_slots, phrase_slots
+from .scoring import (
+    bm25_contrib,
+    bm25_norm,
+    bm25f_contrib,
+    bm25f_weight,
+    idf,
+    rank_margin,
+    term_bound,
+)
 
 TERM_LAYOUT_SCHEMA = (
     "bucket int, term string, df long, cf long, "
@@ -575,8 +585,9 @@ def term_postings(
     allow_stale: bool = False,
 ) -> DataFrame:
     """(term, docid, tf) for the given terms — partition-pruned (bucket) and
-    min/max-pruned (term) scan of the merged layout, decoded Arrow-batched.
-    Refuses a stale snapshot unless ``allow_stale`` (see _check_stale)."""
+    min/max-pruned (term) scan of the merged layout, one grouped decode
+    per Arrow batch. Refuses a stale snapshot unless ``allow_stale`` (see
+    _check_stale)."""
     meta = _load_meta(layout_dir)
     _check_stale(meta, allow_stale)
     rows = _pruned_rows(spark, layout_dir, meta, terms).select(
@@ -584,16 +595,11 @@ def term_postings(
 
     def decode(iterator):
         for pdf in iterator:
-            frames = []
-            for r in pdf.itertuples():
-                ids, tfs = decode_postings(r.postings)
-                frames.append(pd.DataFrame(
-                    {"term": r.term, "docid": ids, "tf": tfs.astype(np.int32)}
-                ))
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame({"term": pd.Series([], dtype="str"),
-                                      "docid": pd.Series([], dtype="int64"),
-                                      "tf": pd.Series([], dtype="int32")}))
+            ids, tfs, counts = decode_postings_grouped(
+                pdf["postings"].tolist())
+            yield pd.DataFrame({
+                "term": np.repeat(pdf["term"].to_numpy(dtype=object), counts),
+                "docid": ids, "tf": tfs})
 
     return rows.mapInPandas(decode, "term string, docid long, tf int")
 
@@ -628,7 +634,55 @@ EXPENSIVE_DF_FRACTION = 0.05
 # df sum exceeds this cap fall back to the full scan (disclosed trade-off)
 CANDIDATE_CAP = 2_000_000
 
-_EPS = 1e-9
+
+def _contrib_batch(
+    pdf: pd.DataFrame,
+    qids_by_term: dict[str, list[int]],
+    idf_by_term: dict[str, float],
+    avgdl: float,
+    cand_by_qid: dict[int, np.ndarray],
+    restrict: set[tuple[int, str]],
+    weights: dict[tuple[int, str], float],
+) -> pd.DataFrame:
+    """One Arrow batch of layout rows (term, postings, doclens) → its
+    (query_id, docid, contrib) rows: one grouped decode of the subscribed
+    rows, one kernel call, and the (row, query) subscriptions fanned out
+    with ``np.repeat`` in (row, subscriber) order — each query's
+    contributions keep their scan-row order, so Spark's ``sum`` adds them
+    in that order."""
+    pdf = pdf[pdf["term"].isin(list(qids_by_term))]
+    terms = pdf["term"].tolist()
+    ids, tfs, counts = decode_postings_grouped(pdf["postings"].tolist())
+    dls, n_dls = _varbyte_decode_grouped(pdf["doclens"].tolist())
+    if not np.array_equal(n_dls, counts):
+        raise ValueError("layout doclens out of step with postings")
+    contrib = bm25_contrib(
+        np.repeat([idf_by_term[t] for t in terms], counts),
+        tfs.astype(np.float64), bm25_norm(dls.astype(np.float64), avgdl))
+    subs = [(row, qid) for row, t in enumerate(terms)
+            for qid in qids_by_term[t]]
+    sub_row = np.array([r for r, _ in subs], np.int64)
+    n_out = counts[sub_row]
+    out_at = np.cumsum(n_out) - n_out
+    # posting index of every emitted row: its row's postings, per subscriber
+    idx = np.arange(int(n_out.sum()), dtype=np.int64) + np.repeat(
+        (np.cumsum(counts) - counts)[sub_row] - out_at, n_out)
+    docid = ids[idx]
+    keep = np.ones(len(idx), bool)
+    for (row, qid), lo, n in zip(subs, out_at, n_out):
+        if (qid, terms[row]) in restrict:
+            cand = cand_by_qid[qid]
+            pos = np.searchsorted(cand, docid[lo:lo + n])
+            keep[lo:lo + n] = (pos < len(cand)) & (
+                cand[np.minimum(pos, len(cand) - 1)] == docid[lo:lo + n])
+    # boosts multiply their contributions (x * 1.0 is exact)
+    w = np.repeat([weights.get((q, terms[r]), 1.0) for r, q in subs], n_out)
+    return pd.DataFrame({
+        "query_id": np.repeat(np.array([q for _, q in subs], np.int32),
+                              n_out)[keep],
+        "docid": docid[keep],
+        "contrib": (contrib[idx] * w)[keep],
+    })
 
 
 def _contrib_rows(
@@ -641,55 +695,18 @@ def _contrib_rows(
     weights: dict[tuple[int, str], float] | None = None,
 ) -> DataFrame:
     """(query_id, docid, contrib): PRE-aggregation exact BM25 term
-    contributions for the subscribed (query, term) pairs. ``restrict``
-    marks (qid, term) pairs whose postings are emitted ONLY for docids in
+    contributions for the subscribed (query, term) pairs, one
+    :func:`_contrib_batch` per Arrow batch. ``restrict`` marks (qid,
+    term) pairs whose postings are emitted ONLY for docids in
     ``cand_by_qid[qid]`` (the MaxScore candidate gate); unrestricted
     pairs emit everything. ``weights``: per-(query, term) multiplier on
     the BM25 contribution (term boosts; missing = 1.0)."""
-    cand_by_qid = cand_by_qid or {}
-    restrict = restrict or set()
-    weights = weights or {}
+    args = (qids_by_term, idf_by_term, avgdl, cand_by_qid or {},
+            restrict or set(), weights or {})
 
     def score_fn(iterator):
         for pdf in iterator:
-            frames = []
-            for r in pdf.itertuples():
-                qids = qids_by_term.get(r.term)
-                if not qids:
-                    continue
-                ids, tfs = decode_postings(r.postings)
-                dls = _varbyte_decode(r.doclens).astype(np.float64)
-                tf = tfs.astype(np.float64)
-                contrib = idf_by_term[r.term] * (tf * (K1 + 1.0)) / (
-                    tf + K1 * (1.0 - B + B * dls / avgdl)
-                )
-                for qid in qids:
-                    w = weights.get((qid, r.term), 1.0)
-                    qcontrib = contrib * w if w != 1.0 else contrib
-                    if (qid, r.term) in restrict:
-                        cand = cand_by_qid[qid]
-                        pos = np.searchsorted(cand, ids)
-                        hit = (pos < len(cand)) & (
-                            cand[np.minimum(pos, len(cand) - 1)] == ids
-                        )
-                        if not hit.any():
-                            continue
-                        frames.append(pd.DataFrame({
-                            "query_id": np.int32(qid),
-                            "docid": ids[hit],
-                            "contrib": qcontrib[hit],
-                        }))
-                    else:
-                        frames.append(pd.DataFrame({
-                            "query_id": np.int32(qid),
-                            "docid": ids,
-                            "contrib": qcontrib,
-                        }))
-            yield (pd.concat(frames, ignore_index=True) if frames
-                   else pd.DataFrame({
-                       "query_id": pd.Series([], dtype="int32"),
-                       "docid": pd.Series([], dtype="int64"),
-                       "contrib": pd.Series([], dtype="float64")}))
+            yield _contrib_batch(pdf, *args)
 
     return rows.select("term", "postings", "doclens").mapInPandas(
         score_fn, "query_id int, docid long, contrib double"
@@ -722,10 +739,18 @@ def _scored_rows(
     matches) aggregate to a NULL score and are dropped by ``score IS NOT
     NULL`` — exactly the docs the old semi-join never saw on the scored
     side."""
+    return _summed(_contrib_rows(rows, qids_by_term, idf_by_term, avgdl,
+                                 cand_by_qid, restrict, weights),
+                   mask_parts, mask_pred, with_count)
+
+
+def _summed(contribs: DataFrame, mask_parts: list[DataFrame] | None,
+            mask_pred, with_count: bool = False) -> DataFrame:
+    """(query_id, docid, score[, nt]): per-(query, doc) sums of
+    (query_id, docid, contrib) rows, fused with the front-door mask rows
+    when ``mask_parts`` is given (see :func:`_scored_rows`)."""
     from functools import reduce as _reduce
 
-    contribs = _contrib_rows(rows, qids_by_term, idf_by_term, avgdl,
-                             cand_by_qid, restrict, weights)
     if mask_parts:
         assert not with_count and mask_pred is not None
         mrows = _reduce(DataFrame.unionByName, mask_parts).select(
@@ -788,9 +813,10 @@ def bm25_topk(
     1. cheap-only scoring establishes θ₀ = the k-th best partial score
        (a lower bound on the final k-th best, since scores only grow);
     2. a doc holding ONLY expensive terms scores ≤ Σ idf_t·(K1+1) over
-       the query's expensive terms (tfnorm < K1+1 always) — when that
-       bound < θ₀ − margin (two rounding ulps, the wand.py rank-safety
-       argument), such docs provably cannot enter or tie the top-k;
+       the query's expensive terms (``scoring.term_bound``: tfnorm < K1+1
+       always) — when that bound < θ₀ − ``scoring.rank_margin`` (two
+       rounding ulps of slack), such docs provably cannot enter or tie
+       the top-k;
     3. the expensive terms' postings are then emitted ONLY for the
        cheap-term candidate docs (sorted-array gate inside the scan
        task), collapsing the stopword's df-sized emission to the
@@ -827,7 +853,6 @@ def bm25_topk(
     gating phase and the final job, so θ₀ is the k-th best partial among
     tree-matching docs and the gate stays exact, as with filter_by."""
     from ..analyzer import get_analyzer
-    from .wand import _idf
 
     meta = _load_meta(layout_dir)
     if not meta.get("has_doclens"):
@@ -865,31 +890,68 @@ def bm25_topk(
            if float(w) != 1.0}
 
     n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-    if expensive_df is None:
-        expensive_df = max(EXPENSIVE_DF_FLOOR,
-                           int(EXPENSIVE_DF_FRACTION * n_docs))
-    idf_by_term = {t: _idf(n_docs, d) for t, d in df_by_term.items()}
-    plans = []  # (qid, [present terms])
-    for qid, ts in qterms.items():
-        present = [t for t in ts if t in idf_by_term]
-        if present:
-            plans.append((int(qid), present))
+    idf_by_term = {t: idf(n_docs, d) for t, d in df_by_term.items()}
+    plans = [(qid, present) for qid, ts in qterms.items()
+             if (present := [t for t in ts if t in idf_by_term])]
     if not plans:
         return local_frame(
             spark, [], "query_id int, rank int, docid long, score double"
         )
-    margin = (2.0 * 10.0 ** (-round_to) if round_to is not None
-              else 0.0) + _EPS
+    qids_by_term, cand_by_qid, restrict = _maxscore_gate(
+        plans, df_by_term,
+        lambda qid, exp: sum(term_bound(wts.get((qid, t), 1.0)
+                                        * idf_by_term[t]) for t in exp),
+        lambda subs: _apply_filter(_scored_rows(
+            rows, subs, idf_by_term, avgdl, weights=wts, **_mask_kw),
+            filter_by),
+        n_docs, k, round_to, expensive_df,
+    )
+    scored = _scored_rows(rows, qids_by_term, idf_by_term, avgdl,
+                          cand_by_qid, restrict, weights=wts, **_mask_kw)
+    return rank_topk(_apply_filter(scored, filter_by), k, round_to)
 
-    # per-query split: pruning needs BOTH a cheap side (to establish θ₀ and
-    # the candidate set) and an expensive side (worth gating)
+
+def _subscriptions(plans) -> dict[str, list[int]]:
+    """{term: [query ids subscribing to it]} from [(qid, terms)], in plan
+    order."""
+    subs: dict[str, list[int]] = {}
+    for qid, ts in plans:
+        for t in ts:
+            subs.setdefault(t, []).append(qid)
+    return subs
+
+
+def _maxscore_gate(plans, cost, bound, phase1, n_docs: int, k: int,
+                   round_to: int | None, expensive_df: int | None):
+    """The MaxScore candidate gate of the ranked layout paths →
+    (qids_by_term, cand_by_qid, restrict) for the final scoring job.
+
+    ``plans``: [(qid, present terms)]; ``cost[t]``: the rows term t
+    decodes and emits (the cheap/expensive split, ``expensive_df``
+    defaulting to max(1M, 5% of corpus), and the CANDIDATE_CAP check);
+    ``bound(qid, exp)``: an upper bound on the score of a doc holding
+    only the query's expensive terms ``exp``; ``phase1(subs)``: the
+    (query_id, docid, score) partial scores of the subscriptions ``subs``
+    with every filter applied.
+
+    A query with cheap and expensive terms and Σ cheap cost ≤
+    CANDIDATE_CAP scores its cheap terms first (one job for the batch):
+    θ₀ = the k-th best partial score, a lower bound on the final k-th
+    best. When bound < θ₀ − ``scoring.rank_margin``, a doc holding only
+    expensive terms can neither enter nor tie the top-k, so the
+    expensive terms emit only for the cheap candidates (``restrict``).
+    Every other query scores all its terms ungated."""
+    if expensive_df is None:
+        expensive_df = max(EXPENSIVE_DF_FLOOR,
+                           int(EXPENSIVE_DF_FRACTION * n_docs))
+    margin = rank_margin(round_to)
     maybe = []      # (qid, present, cheap, exp) — gate candidates
     to_score = []   # (qid, present) — final-job subscriptions
     for qid, present in plans:
-        cheap = [t for t in present if df_by_term[t] <= expensive_df]
-        exp = [t for t in present if df_by_term[t] > expensive_df]
+        cheap = [t for t in present if cost[t] <= expensive_df]
+        exp = [t for t in present if cost[t] > expensive_df]
         if (not exp or not cheap
-                or sum(df_by_term[t] for t in cheap) > CANDIDATE_CAP):
+                or sum(cost[t] for t in cheap) > CANDIDATE_CAP):
             to_score.append((qid, present))
         else:
             maybe.append((qid, present, cheap, exp))
@@ -897,32 +959,20 @@ def bm25_topk(
     cand_by_qid: dict[int, np.ndarray] = {}
     restrict: set[tuple[int, str]] = set()
     if maybe:
-        # phase 1: cheap-only scoring for the gating queries — one job
-        cheap_sub: dict[str, list[int]] = {}
-        for qid, _, cheap, _ in maybe:
-            for t in cheap:
-                cheap_sub.setdefault(t, []).append(qid)
-        phase1_df = _scored_rows(rows, cheap_sub, idf_by_term, avgdl,
-                                 weights=wts, **_mask_kw)
-        if filter_by is not None:
-            phase1_df = _apply_filter(phase1_df, filter_by)
         # Arrow transfer + vectorized per-query partition: at the 2M-row
         # CANDIDATE_CAP this moves columnar batches instead of building
-        # millions of Python Row objects (round-5 verdict item #1)
-        p1 = phase1_df.toPandas()
+        # millions of Python Row objects
+        p1 = phase1(_subscriptions(
+            (qid, cheap) for qid, _, cheap, _ in maybe)).toPandas()
         qids_a = p1["query_id"].to_numpy()
         docs_a = p1["docid"].to_numpy(dtype=np.int64)
         scores_a = p1["score"].to_numpy(dtype=np.float64)
         for qid, present, cheap, exp in maybe:
             m = qids_a == qid
             got_docs, got_scores = docs_a[m], scores_a[m]
-            exp_bound = sum(wts.get((qid, t), 1.0)
-                            * idf_by_term[t] * (K1 + 1.0) for t in exp)
-            if len(got_scores) >= k:
-                theta0 = np.partition(got_scores, -k)[-k]
-            else:
-                theta0 = -np.inf
-            if exp_bound < theta0 - margin:
+            theta0 = (np.partition(got_scores, -k)[-k]
+                      if len(got_scores) >= k else -np.inf)
+            if bound(qid, exp) < theta0 - margin:
                 cand_by_qid[qid] = np.sort(got_docs)
                 restrict.update((qid, t) for t in exp)
             else:  # bound can't exclude stopword-only docs → full scan
@@ -933,27 +983,7 @@ def bm25_topk(
             (qid, present) for qid, present, _, _ in maybe
             if qid in cand_by_qid
         )
-
-    qids_by_term: dict[str, list[int]] = {}
-    for qid, present in to_score:
-        for t in present:
-            qids_by_term.setdefault(t, []).append(qid)
-
-    scored = _scored_rows(rows, qids_by_term, idf_by_term, avgdl,
-                          cand_by_qid, restrict, weights=wts, **_mask_kw)
-    if filter_by is not None:
-        scored = _apply_filter(scored, filter_by)
-    score = (F.round(F.col("score"), round_to) if round_to is not None
-             else F.col("score"))
-    win = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("docid").asc()
-    )
-    return (
-        scored.select("query_id", "docid", score.alias("score"))
-        .withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return _subscriptions(to_score), cand_by_qid, restrict
 
 
 def _check_qweights(qweights) -> None:
@@ -970,10 +1000,13 @@ def _check_qweights(qweights) -> None:
                 )
 
 
-def _apply_filter(df: DataFrame, filter_by: DataFrame) -> DataFrame:
-    """Semi-join a filter onto scored rows. One docid column = one shared
-    filter for every query; a (query_id, docid) filter (e.g. from
-    `query.match_layout_batch`) restricts each query independently."""
+def _apply_filter(df: DataFrame, filter_by: DataFrame | None) -> DataFrame:
+    """Semi-join a filter onto scored rows (None: no filter). One docid
+    column = one shared filter for every query; a (query_id, docid)
+    filter (e.g. from `query.match_layout_batch`) restricts each query
+    independently."""
+    if filter_by is None:
+        return df
     keys = (["query_id", "docid"] if "query_id" in filter_by.columns
             else ["docid"])
     return df.join(filter_by, keys, "left_semi")
@@ -999,10 +1032,11 @@ def _scored_fielded(
     (qid, base term) pairs whose rows are EMITTED only for docids in
     ``cand_by_qid[qid]`` (the MaxScore candidate gate): the decode and
     the exact contrib still cover every posting — only the shuffle
-    traffic shrinks — so emitted scores are exact by construction."""
+    traffic shrinks — so emitted scores are exact by construction.
+    ``mask_parts``/``mask_pred``: the fused front-door tail, with the
+    exactness argument of :func:`_scored_rows`."""
     from ..fielded import DEFAULT_BOOST
     from .spimi import FIELD_SEP
-    from .wand import _idf
 
     cand_by_qid = cand_by_qid or {}
     restrict = restrict or set()
@@ -1017,17 +1051,16 @@ def _scored_fielded(
                 continue
             by_field = {r.fld: r for r in grp.itertuples()}
             acc_ids, acc_w = [], []
-            for f in fields:  # field-sorted accumulation order — matches
-                r = by_field.get(f)  # fielded._term_tfw's left-assoc sums
+            for f in fields:  # tfw sums fields in sorted order, like every
+                r = by_field.get(f)  # numpy BM25F scorer (scoring.py)
                 if r is None:
                     continue
                 ids, tfs = decode_postings(r.postings)
                 dls = _varbyte_decode(r.doclens).astype(np.float64)
                 acc_ids.append(ids)
-                acc_w.append(
-                    boosts.get(f, DEFAULT_BOOST) * tfs.astype(np.float64)
-                    / (1.0 - B + B * dls / avglen[f])
-                )
+                acc_w.append(bm25f_weight(boosts.get(f, DEFAULT_BOOST),
+                                          tfs.astype(np.float64), dls,
+                                          avglen[f]))
             if not acc_ids:
                 continue
             ids = np.concatenate(acc_ids)
@@ -1040,7 +1073,7 @@ def _scored_fielded(
             tfw = np.add.reduceat(w, starts)
             # doc-level df is bucket-local by construction (all the term's
             # composites are here), so idf needs no extra job
-            contrib = _idf(n_docs, len(uids)) * tfw / (K1 + tfw)
+            contrib = bm25f_contrib(idf(n_docs, len(uids)), tfw)
             for qid in qids:
                 u, c = uids, contrib
                 if (qid, t) in restrict:
@@ -1063,35 +1096,11 @@ def _scored_fielded(
                     "docid": pd.Series([], dtype="int64"),
                     "contrib": pd.Series([], dtype="float64")}))
 
-    contribs = (
+    return _summed(
         rows.select("bucket", "term", "postings", "doclens")
         .groupBy("bucket")
-        .applyInPandas(score_bucket, "query_id int, docid long, contrib double")
-    )
-    if mask_parts:
-        # FUSED fielded front-door tail — same construction and exactness
-        # argument as _scored_rows (mask rows carry NULL contrib)
-        from functools import reduce as _reduce
-
-        mrows = _reduce(DataFrame.unionByName, mask_parts).select(
-            "query_id", "docid", "mask"
-        )
-        combined = contribs.select(
-            "query_id", "docid", F.lit(0).cast("long").alias("mask"),
-            "contrib",
-        ).unionByName(mrows.select(
-            "query_id", "docid", "mask",
-            F.lit(None).cast("double").alias("contrib"),
-        ))
-        agg = combined.groupBy("query_id", "docid").agg(
-            F.expr("bit_or(mask)").alias("mask"),
-            F.sum("contrib").alias("score"),
-        )
-        return (agg.filter(mask_pred & F.col("score").isNotNull())
-                .select("query_id", "docid", "score"))
-    return contribs.groupBy("query_id", "docid").agg(
-        F.sum("contrib").alias("score")
-    )
+        .applyInPandas(score_bucket, "query_id int, docid long, contrib double"),
+        mask_parts, mask_pred)
 
 
 def bm25f_topk(
@@ -1152,7 +1161,6 @@ def bm25f_topk(
     weighting of `GazetteerOutWriter.java:455-550`."""
     from ..analyzer import get_analyzer
     from .spimi import FIELD_SEP
-    from .wand import _idf
 
     meta = _load_meta(layout_dir)
     if not meta.get("fielded"):
@@ -1184,9 +1192,6 @@ def bm25f_topk(
     fields = meta["fields"]  # sorted at build — deterministic float sums
     n_docs = meta["n_docs"]
     avglen = {f: meta["field_totals"].get(f, 0) / n_docs for f in fields}
-    if expensive_df is None:
-        expensive_df = max(EXPENSIVE_DF_FLOOR,
-                           int(EXPENSIVE_DF_FRACTION * n_docs))
 
     # per-base metadata: cost = Σ_f df_f (decode + emission rows), df
     # lower bound = max_f df_f (→ idf upper bound)
@@ -1196,85 +1201,24 @@ def bm25f_topk(
         base = comp_term.split(FIELD_SEP, 1)[-1]
         df_cost[base] = df_cost.get(base, 0) + d
         df_lb[base] = max(df_lb.get(base, 0), d)
-    plans = []
-    for qid, ts in qterms.items():
-        present = [t for t in ts if t in df_cost]
-        if present:
-            plans.append((int(qid), present))
+    plans = [(qid, present) for qid, ts in qterms.items()
+             if (present := [t for t in ts if t in df_cost])]
     if not plans:
         return local_frame(
             spark, [], "query_id int, rank int, docid long, score double"
         )
-    margin = (2.0 * 10.0 ** (-round_to) if round_to is not None
-              else 0.0) + _EPS
-
-    maybe = []      # (qid, present, cheap, exp) — gate candidates
-    to_score = []   # (qid, present) — final-job subscriptions
-    for qid, present in plans:
-        cheap = [t for t in present if df_cost[t] <= expensive_df]
-        exp = [t for t in present if df_cost[t] > expensive_df]
-        if (not exp or not cheap
-                or sum(df_cost[t] for t in cheap) > CANDIDATE_CAP):
-            to_score.append((qid, present))
-        else:
-            maybe.append((qid, present, cheap, exp))
-
-    cand_by_qid: dict[int, np.ndarray] = {}
-    restrict: set[tuple[int, str]] = set()
-    if maybe:
-        # phase 1: cheap-only scoring for the gating queries — one job
-        cheap_sub: dict[str, list[int]] = {}
-        for qid, _, cheap, _ in maybe:
-            for t in cheap:
-                cheap_sub.setdefault(t, []).append(qid)
-        phase1_df = _scored_fielded(rows, cheap_sub, fields, boosts, avglen,
-                                    n_docs, **_mask_kw)
-        if filter_by is not None:
-            phase1_df = _apply_filter(phase1_df, filter_by)
-        # Arrow transfer + vectorized partition (see bm25_topk)
-        p1 = phase1_df.toPandas()
-        qids_a = p1["query_id"].to_numpy()
-        docs_a = p1["docid"].to_numpy(dtype=np.int64)
-        scores_a = p1["score"].to_numpy(dtype=np.float64)
-        for qid, present, cheap, exp in maybe:
-            m = qids_a == qid
-            got_docs, got_scores = docs_a[m], scores_a[m]
-            # contrib < idf (tfw/(K1+tfw) < 1); idf(max_f df_f) ≥ idf(df)
-            exp_bound = sum(_idf(n_docs, df_lb[t]) for t in exp)
-            if len(got_scores) >= k:
-                theta0 = np.partition(got_scores, -k)[-k]
-            else:
-                theta0 = -np.inf
-            if exp_bound < theta0 - margin:
-                cand_by_qid[qid] = np.sort(got_docs)
-                restrict.update((qid, t) for t in exp)
-            else:  # bound can't exclude stopword-only docs → full scan
-                to_score.append((qid, present))
-        to_score.extend(
-            (qid, present) for qid, present, _, _ in maybe
-            if qid in cand_by_qid
-        )
-
-    qids_by_term: dict[str, list[int]] = {}
-    for qid, present in to_score:
-        for t in present:
-            qids_by_term.setdefault(t, []).append(qid)
-
+    qids_by_term, cand_by_qid, restrict = _maxscore_gate(
+        plans, df_cost,
+        # contrib < idf (tfw/(K1+tfw) < 1); idf(max_f df_f) ≥ idf(df)
+        lambda qid, exp: sum(idf(n_docs, df_lb[t]) for t in exp),
+        lambda subs: _apply_filter(_scored_fielded(
+            rows, subs, fields, boosts, avglen, n_docs, **_mask_kw),
+            filter_by),
+        n_docs, k, round_to, expensive_df,
+    )
     scored = _scored_fielded(rows, qids_by_term, fields, boosts, avglen,
                              n_docs, cand_by_qid, restrict, **_mask_kw)
-    if filter_by is not None:
-        scored = _apply_filter(scored, filter_by)
-    score = (F.round(F.col("score"), round_to) if round_to is not None
-             else F.col("score"))
-    win = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("docid").asc()
-    )
-    return (
-        scored.select("query_id", "docid", score.alias("score"))
-        .withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return rank_topk(_apply_filter(scored, filter_by), k, round_to)
 
 
 class TermLayoutReader:
@@ -1393,7 +1337,6 @@ def bm25_and_topk(
     same job. Either way the conjunctive predicate is enforced by the
     contributing-term count, so results are exact by construction."""
     from ..analyzer import get_analyzer
-    from .wand import _idf
 
     meta = _load_meta(layout_dir)
     if not meta.get("has_doclens"):
@@ -1418,7 +1361,7 @@ def bm25_and_topk(
     df_by_term, blobs = (got if got is not None
                          else _term_meta(rows, min(gate_cap,
                                                    INLINE_GATE_DF)))
-    idf_by_term = {t: _idf(n_docs, d) for t, d in df_by_term.items()}
+    idf_by_term = {t: idf(n_docs, d) for t, d in df_by_term.items()}
 
     plans = []  # strict AND: every analyzed term must exist in the corpus
     for qid, ts in qterms.items():
@@ -1455,29 +1398,14 @@ def bm25_and_topk(
                 (qid, t) for t in qterms[qid] if t != rare
             )
 
-    qids_by_term: dict[str, list[int]] = {}
-    for qid, ts in plans:
-        for t in ts:
-            qids_by_term.setdefault(t, []).append(qid)
     nt_required = F.create_map(
         *[F.lit(v) for qid, ts in plans for v in (qid, len(ts))]
     )
-    scored = _scored_rows(rows, qids_by_term, idf_by_term, avgdl,
+    scored = _scored_rows(rows, _subscriptions(plans), idf_by_term, avgdl,
                           cand_by_qid, restrict, with_count=True)
-    scored = scored.filter(
-        F.col("nt") == nt_required[F.col("query_id")]
-    )
-    score = (F.round(F.col("score"), round_to) if round_to is not None
-             else F.col("score"))
-    win = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("docid").asc()
-    )
-    return (
-        scored.select("query_id", "docid", score.alias("score"))
-        .withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return rank_topk(
+        scored.filter(F.col("nt") == nt_required[F.col("query_id")]),
+        k, round_to)
 
 
 # ---------------------------------------------------------------------------
@@ -1940,7 +1868,6 @@ def phrase_topk(
     rows only for docs that truly contain the phrase. Both sides of that
     join are candidate-bounded."""
     from .phrase import _phrase_plans
-    from .wand import _idf
 
     meta, tokenize = _positional_meta(layout_dir, allow_stale)
     if not meta.get("has_doclens"):
@@ -1958,31 +1885,18 @@ def phrase_topk(
         )
     matched = _verify_slots(spark, rows, plans, cand_by_qid, n_parts,
                             phrase_slots, "n_occurrences")
-    idf_by_term = {t: _idf(n_docs, d) for t, d in df_by_term.items()}
-    qids_by_term: dict[str, list[int]] = {}
-    restrict: set[tuple[int, str]] = set()
-    for qid, ts in plans:
-        for t in sorted(set(ts)):
-            qids_by_term.setdefault(t, []).append(qid)
-            if cand_by_qid.get(qid) is not None:
-                restrict.add((qid, t))
+    idf_by_term = {t: idf(n_docs, d) for t, d in df_by_term.items()}
+    distinct = [(qid, sorted(set(ts))) for qid, ts in plans]
+    restrict = {(qid, t) for qid, ts in distinct
+                if cand_by_qid.get(qid) is not None for t in ts}
     scored = _scored_rows(
-        rows, qids_by_term, idf_by_term, avgdl,
+        rows, _subscriptions(distinct), idf_by_term, avgdl,
         {q: c for q, c in cand_by_qid.items() if c is not None}, restrict,
     )
-    hits = scored.join(matched.select("query_id", "docid"),
-                       ["query_id", "docid"])
-    score = (F.round(F.col("score"), round_to) if round_to is not None
-             else F.col("score"))
-    win = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("docid").asc()
-    )
-    return (
-        hits.select("query_id", "docid", score.alias("score"))
-        .withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return rank_topk(
+        scored.join(matched.select("query_id", "docid"),
+                    ["query_id", "docid"]),
+        k, round_to)
 
 
 def refresh_term_layout(

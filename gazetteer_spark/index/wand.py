@@ -40,10 +40,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
-from .. import B, K1
 from ..analyzer import get_analyzer
+from ..bm25 import rank_topk
 from ..session import local_frame
 from .codec import (
     DelIndex,
@@ -52,13 +51,15 @@ from .codec import (
     decode_postings,
     decode_postings_grouped,
 )
+from .phrase import _emission_frame
+from .scoring import (
+    bm25_contrib,
+    bm25_norm,
+    idf,
+    local_topk,
+    rank_margin,
+)
 from .spimi import load_stats, load_termstats, termstats_dir
-
-EPS = 1e-9
-
-
-def _idf(n_docs: int, df: int) -> float:
-    return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
 
 
 def _doc_meta(docs_rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -77,21 +78,6 @@ def _doc_meta(docs_rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
         keep[:-1] = all_ids[1:] != all_ids[:-1]
         all_ids, all_lens = all_ids[keep], all_lens[keep]
     return all_ids, all_lens
-
-
-def _local_topk(ids: np.ndarray, scores: np.ndarray, k: int,
-                round_to: int | None, cap: int):
-    """A shard's top-k emission → (ids, raw scores). It must use the SAME
-    ordering as the global merge: (rounded score desc, docid asc). Every
-    doc whose rounded score ties the k-th largest rounded value is kept —
-    rounding is monotone, so docs below that bar can never enter the
-    global top-k — and at most ``cap`` are emitted."""
-    rounded = np.round(scores, round_to) if round_to is not None else scores
-    if len(ids) > k:
-        sel = rounded >= np.partition(rounded, -k)[-k]
-        ids, scores, rounded = ids[sel], scores[sel], rounded[sel]
-    order = np.lexsort((ids, -rounded))[:cap]
-    return ids[order], scores[order]
 
 
 def _score_shard(
@@ -114,11 +100,9 @@ def _score_shard(
         )
     docs_rows = pdf[pdf["kind"] == "docs"]
     if docs_rows.empty or not post_rows:
-        return pd.DataFrame(columns=["query_id", "docid", "score"]).astype(
-            {"query_id": "int32", "docid": "int64", "score": "float64"}
-        )
+        return _emission_frame([])
     all_ids, all_lens = _doc_meta(docs_rows)
-    norm_by_doc = K1 * (1.0 - B + B * all_lens.astype(np.float64) / avgdl)
+    norm_by_doc = bm25_norm(all_lens.astype(np.float64), avgdl)
 
     # tombstones: GENERATION-ORDERED — a del masks only OLDER generations'
     # postings, so re-adds stay visible (Lucene-like otherwise: stats stay
@@ -134,8 +118,8 @@ def _score_shard(
         return ids[keep], tfs[keep]
 
     # per-term segment handles: (pbuf, byte_ends, block_last, block_ub) per
-    # generation + the term-level bound; block_ub includes idf-free
-    # (k1+1)*tfnorm(max_tf, min_dl) evaluated with the scoring float ops
+    # generation + the term-level bound; block_ub is the idf-free
+    # contribution at (max_tf, min_dl), evaluated by the scoring kernel
     class _Seg:
         __slots__ = ("pbuf", "bends", "blast", "bub", "gen")
 
@@ -147,9 +131,8 @@ def _score_shard(
             s = _Seg()
             s.pbuf, s.bends, s.blast, s.gen = pbuf, bends, blast, gen
             if len(bmax_tf):
-                s.bub = (bmax_tf * (K1 + 1.0)) / (
-                    bmax_tf + K1 * (1.0 - B + B * bmin_dl.astype(np.float64) / avgdl)
-                )
+                s.bub = bm25_contrib(
+                    1.0, bmax_tf, bm25_norm(bmin_dl.astype(np.float64), avgdl))
                 tmax = max(tmax, float(s.bub.max()))
             else:
                 s.bub = np.zeros(0)
@@ -172,11 +155,9 @@ def _score_shard(
             full_cache[term] = (ids, tfs)
         return full_cache[term]
 
-    # pruning must never drop a doc that could TIE the k-th result after
-    # rounding: two rounding ulps of slack covers round(x) vs round(kth)
-    margin = (2.0 * 10.0 ** (-round_to) if round_to is not None else 0.0) + EPS
+    margin = rank_margin(round_to)
 
-    out_q, out_d, out_s = [], [], []
+    emitted = []
     for qid, weighted_terms in qplans:
         terms = [(t, idf) for t, idf in weighted_terms if t in terms_meta]
         if not terms:
@@ -197,7 +178,7 @@ def _score_shard(
             if can_introduce:
                 ids, tfs = decode_full(term)
                 pos = np.searchsorted(all_ids, ids)
-                contrib = idf * (tfs * (K1 + 1.0)) / (tfs + norm_by_doc[pos])
+                contrib = bm25_contrib(idf, tfs, norm_by_doc[pos])
                 merged = np.union1d(cand_ids, ids)
                 new_scores = np.zeros(len(merged))
                 new_scores[np.searchsorted(merged, cand_ids)] = cand_scores
@@ -228,7 +209,7 @@ def _score_shard(
                         continue
                     ids, tfs = mask_deleted(*decode_blocks(s.pbuf, s.bends, need), s.gen)
                     pos = np.searchsorted(all_ids, ids)
-                    contrib = idf * (tfs * (K1 + 1.0)) / (tfs + norm_by_doc[pos])
+                    contrib = bm25_contrib(idf, tfs, norm_by_doc[pos])
                     hit = np.searchsorted(cand_ids, ids)
                     hit_ok = (hit < len(cand_ids)) & (
                         cand_ids[np.minimum(hit, len(cand_ids) - 1)] == ids
@@ -241,17 +222,9 @@ def _score_shard(
                 cand_ids, cand_scores = cand_ids[keep], cand_scores[keep]
         if len(cand_ids) == 0:
             continue
-        ids_e, raw_e = _local_topk(cand_ids, cand_scores, k, round_to, cap)
-        out_q.extend([qid] * len(ids_e))
-        out_d.extend(ids_e.tolist())
-        out_s.extend(raw_e.tolist())
-    return pd.DataFrame(
-        {
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "docid": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        }
-    )
+        emitted.append(
+            (qid, *local_topk(cand_ids, cand_scores, k, round_to, cap)))
+    return _emission_frame(emitted)
 
 
 def _lookup_dfs(termstats: DataFrame, terms: list[str]) -> dict[str, int]:
@@ -304,7 +277,7 @@ def _topk_impl(
     if df_by_term is None:
         df_by_term = _lookup_dfs(termstats, all_terms)
     qplans = [
-        (qid, [(t, _idf(n_docs, df_by_term[t])) for t in ts if t in df_by_term])
+        (qid, [(t, idf(n_docs, df_by_term[t])) for t in ts if t in df_by_term])
         for qid, ts in qterms.items()
     ]
     qplans = [(qid, ts) for qid, ts in qplans if ts]
@@ -320,16 +293,7 @@ def _topk_impl(
         lambda pdf: _score_shard(pdf, qplans, avgdl, k, round_to, tie_cap),
         "query_id int, docid long, score double",
     )
-    score = (
-        F.round(F.col("score"), round_to) if round_to is not None else F.col("score")
-    )
-    scored = local.select("query_id", "docid", score.alias("score"))
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("docid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return rank_topk(local, k, round_to)
 
 
 def topk(
@@ -374,16 +338,13 @@ def _score_shard_and(
 
     per_term, _ = _term_handles(pdf)
     docs_rows = pdf[pdf["kind"] == "docs"]
-    empty = pd.DataFrame(columns=["query_id", "docid", "score"]).astype(
-        {"query_id": "int32", "docid": "int64", "score": "float64"}
-    )
     if docs_rows.empty:
-        return empty
+        return _emission_frame([])
     all_ids, all_lens = _doc_meta(docs_rows)
-    norm_by_doc = K1 * (1.0 - B + B * all_lens.astype(np.float64) / avgdl)
+    norm_by_doc = bm25_norm(all_lens.astype(np.float64), avgdl)
     dels = DelIndex.from_pdf(pdf)
 
-    out_q, out_d, out_s = [], [], []
+    emitted = []
     for qid, weighted_terms, n_required in qplans:
         # conjunctive semantics: every analyzed term must exist in the
         # corpus AND in this shard's candidate docs
@@ -410,19 +371,9 @@ def _score_shard_and(
                 hit = np.searchsorted(cand, ids)
                 ok = (hit < len(cand)) & (cand[np.minimum(hit, len(cand) - 1)] == ids)
                 pos = np.searchsorted(all_ids, ids[ok])
-                contrib = idf * (tfs[ok] * (K1 + 1.0)) / (tfs[ok] + norm_by_doc[pos])
-                scores[hit[ok]] += contrib
-        ids_e, raw_e = _local_topk(cand, scores, k, round_to, cap)
-        out_q.extend([qid] * len(ids_e))
-        out_d.extend(ids_e.tolist())
-        out_s.extend(raw_e.tolist())
-    return pd.DataFrame(
-        {
-            "query_id": pd.Series(out_q, dtype="int32"),
-            "docid": pd.Series(out_d, dtype="int64"),
-            "score": pd.Series(out_s, dtype="float64"),
-        }
-    )
+                scores[hit[ok]] += bm25_contrib(idf, tfs[ok], norm_by_doc[pos])
+        emitted.append((qid, *local_topk(cand, scores, k, round_to, cap)))
+    return _emission_frame(emitted)
 
 
 def topk_and(
@@ -455,7 +406,7 @@ def topk_and(
         if len(present) < len(ts):
             continue  # a term missing from the corpus → strict AND empties
         weighted = sorted(
-            ((t, _idf(n_docs, df_by_term[t])) for t in present),
+            ((t, idf(n_docs, df_by_term[t])) for t in present),
             key=lambda x: (df_by_term[x[0]], x[0]),
         )
         qplans.append((qid, weighted, len(ts)))
@@ -472,16 +423,7 @@ def topk_and(
         lambda pdf: _score_shard_and(pdf, qplans, avgdl, k, round_to, tie_cap),
         "query_id int, docid long, score double",
     )
-    score = (
-        F.round(F.col("score"), round_to) if round_to is not None else F.col("score")
-    )
-    scored = local.select("query_id", "docid", score.alias("score"))
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("docid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return rank_topk(local, k, round_to)
 
 
 class IndexReader:

@@ -1200,9 +1200,9 @@ def more_like_this(
     shape: the seed doc reads via a pushed-down id filter (one row), its
     term stats via the termstats dictionary probe — both driver-side
     metadata — then ONE ranked layout query serves the result."""
-    import math
-
+    from .bm25 import rank_topk
     from .index import spimi, termindex
+    from .index.scoring import idf
 
     meta = termindex._load_meta(layout_dir)
     an = get_analyzer(meta["analyzer"])
@@ -1221,24 +1221,17 @@ def more_like_this(
            ts.filter(F.col("term").isin(sorted(tf))).collect()}
     n_docs = meta["n_docs"]
     ranked = sorted(
-        ((round(tf[t] * math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5)), 6),
-          t) for t, d in dfs.items()),
+        ((round(tf[t] * idf(n_docs, d), 6), t) for t, d in dfs.items()),
         key=lambda p: (-p[0], p[1]),
     )
     seed = [t for _, t in ranked[:max_terms]]
     if not seed:
         raise ValueError(f"doc {doc_id} shares no terms with the index")
-    from pyspark.sql import Window as W
-
     res = termindex.bm25_topk(
         spark, layout_dir, [(0, " ".join(seed))], k=k + 1,
         round_to=round_to, allow_stale=allow_stale,
     ).filter(F.col("docid") != doc_id)
-    win = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("docid").asc())
-    return (res.withColumn("rank", F.row_number().over(win))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    return rank_topk(res, k, round_to)
 
 
 def _scored_query_terms(

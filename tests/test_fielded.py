@@ -262,7 +262,7 @@ def test_fielded_blockmax_skips_high_df_full_decode(
     decoded (only candidate-holding blocks are touched) — the fielded twin
     of wand.py's update-only phase. Results stay exact (pinned by
     test_index_matches_exact and the random-boost property test)."""
-    from gazetteer_spark.index.wand import _idf
+    from gazetteer_spark.index.scoring import idf as _idf
 
     d = str(tmp_path_factory.mktemp("fidx_bm"))
     fielded.build_fielded_index(spark, documents, d, FIELDS, n_shards=1,
@@ -373,7 +373,7 @@ def test_fielded_maxscore_equals_exhaustive_property(docs, boosts, qterms, k):
 
     from gazetteer_spark import B, K1
     from gazetteer_spark.fielded import _score_shard_fielded
-    from gazetteer_spark.index.wand import _idf
+    from gazetteer_spark.index.scoring import idf as _idf
 
     rows = [(docid, f, t, tf) for docid, doc in enumerate(docs)
             for f, t, tf in doc]
@@ -449,7 +449,7 @@ def test_unit_maxscore_skips_low_boost_wide_field(spark, tmp_path_factory,
     selective decode). This is the field-granular pruning the per-TERM
     bound (fields summed) could not express: the summed bound was dragged
     up by the narrow field, forcing a full decode of the wide postings."""
-    from gazetteer_spark.index.wand import _idf
+    from gazetteer_spark.index.scoring import idf as _idf
 
     rows = []
     for i in range(6):  # narrow field fa: 'tag' + a filler

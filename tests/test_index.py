@@ -95,25 +95,6 @@ def test_wand_oov_empty(spark, index_dir):
     assert wand.topk(spark, index_dir, [(0, "zzz_not_here")], k=5).count() == 0
 
 
-def test_local_topk_emission_pins_rank_order():
-    """A shard's emission keeps every doc tied with the k-th rounded
-    score, orders by (rounded score desc, docid asc), returns raw
-    scores, and stops at the cap. Spark-free."""
-    import numpy as np
-
-    ids = np.array([9, 4, 7, 2, 5, 1], np.int64)
-    scores = np.array([1.00004, 2.0, 0.99996, 1.00001, 0.5, 3.0])
-    got_ids, got_raw = wand._local_topk(ids, scores, 3, 4, 10)
-    # rounded: 1.0, 2.0, 1.0, 1.0, 0.5, 3.0 — the bar (3rd) is 1.0
-    assert got_ids.tolist() == [1, 4, 2, 7, 9]
-    assert got_raw.tolist() == [3.0, 2.0, 1.00001, 0.99996, 1.00004]
-    assert wand._local_topk(ids, scores, 3, 4, 2)[0].tolist() == [1, 4]
-    # unrounded: no ties, exactly k; k ≥ n keeps everything
-    assert wand._local_topk(ids, scores, 3, None, 10)[0].tolist() == [1, 4, 9]
-    assert wand._local_topk(ids, scores, 6, None, 10)[0].tolist() == [
-        1, 4, 9, 2, 7, 5]
-
-
 def test_resume_after_kill(spark, documents, tmp_path_factory, monkeypatch):
     full = str(tmp_path_factory.mktemp("idx_full"))
     spimi.build_index(spark, documents, full, n_shards=8, id_col="doc_id",
